@@ -5,9 +5,10 @@ Usage: python scripts/explain_queries.py <suffix> q1 q2 ...  [--sf DIR]
 Writes plans/r11/<query>_<suffix>.txt for each query. Mostly plan-only:
 builds the DataFrame and renders the formatted plan without executing
 the query itself — but queries whose CONSTRUCTION resolves a cached
-corpus scalar (adaptive index depths via _corpus_n/_simhash_bits/
-table_n, tfidf's pair-parallelism bound) run one small count() job the
-first time that (session, dataset) scalar is touched (ADVICE r11).
+corpus scalar (row counts via data.table_n, from which adaptive index
+depths and fan-out widths derive; tfidf's pair-parallelism bound) run
+one small count() job the first time that (session, dataset) scalar is
+touched (ADVICE r11).
 Still cheap enough to run while other work occupies the box.
 """
 

@@ -109,16 +109,34 @@ _TABLE_N_CACHE: dict = {}
 
 
 def table_n(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Row count of a base table, cached per dataset signature (the
-    similarity._corpus_n pattern, generalized): one count() job per
-    (session, dataset, table). Used to derive reduce widths for
-    compute-dense stages whose map-output BYTES are too small for
-    AQE's byte-target coalescing to size correctly (guide §2.5 — AQE
-    cannot see per-row fan-out or fold cost)."""
+    """Row count of a base table, cached per dataset signature: one
+    count() job per (session, dataset, table) — the only row-count memo
+    in the engine. Adaptive index depths, blocking widths and
+    fanout_width estimates are plain arithmetic on it; mtime keying
+    invalidates on dataset rebuild."""
     key = dataset_cache_key(sf_dir, table)
     if key not in _TABLE_N_CACHE:
         _TABLE_N_CACHE[key] = load_table(spark, sf_dir, table).count()
     return _TABLE_N_CACHE[key]
+
+
+# Candidate pairs per task for the similarity-family self-joins (r11,
+# measured on the banded detector): ~2M scored pairs ≈ 1-2 s of fold
+# CPU per task.
+PAIRS_PER_TASK = 2_000_000
+
+
+def fanout_width(spark: SparkSession, est_rows: int, rows_per_task: int) -> int:
+    """Reduce width for a compute-dense stage whose map-output BYTES
+    are too small for AQE's byte-target coalescing to size (guide §2.5:
+    AQE cannot see per-row fan-out or fold cost, and collapsed such
+    stages onto one task). ceil(est_rows / rows_per_task), floored at
+    defaultParallelism so every core works, capped at 65536 tasks — a
+    bound only absurd sizes reach (2B vectors · 123 bands still need
+    ~16k tasks at PAIRS_PER_TASK). An explicit width is a
+    REPARTITION_BY_NUM, which AQE never coalesces."""
+    dp = spark.sparkContext.defaultParallelism
+    return max(dp, min(-(-est_rows // rows_per_task), 65536))
 
 
 def widen(df: DataFrame) -> DataFrame:

@@ -37,7 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streams_prototyping_spark.data import load_table
+from streams_prototyping_spark.data import (
+    PAIRS_PER_TASK,
+    fanout_width,
+    load_table,
+    table_n,
+)
 from streams_prototyping_spark.registry import register
 from streams_prototyping_spark.stage_cache import shared_stage
 
@@ -60,22 +65,14 @@ _K_EXPR_DUCK = (
     f"GREATEST({K_CELLS}, LEAST({MAX_K_CELLS}, "
     f"CAST(ceil(count(*) / {TARGET_CELL_SIZE}.0) AS BIGINT)))"
 )
-_K_CACHE: dict = {}
 
 
 def _k_cells(spark: "SparkSession", sf_dir: str) -> int:
-    """Driver-side twin of _K_EXPR_DUCK (cached one count per sf_dir)."""
-    from streams_prototyping_spark.data import dataset_cache_key
+    """Driver-side twin of _K_EXPR_DUCK (on the cached corpus count)."""
+    import math
 
-    key = dataset_cache_key(sf_dir, "embeddings")
-    if key not in _K_CACHE:
-        import math
-
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _K_CACHE[key] = max(
-            K_CELLS, min(MAX_K_CELLS, math.ceil(n / float(TARGET_CELL_SIZE)))
-        )
-    return _K_CACHE[key]
+    n = table_n(spark, sf_dir, "embeddings")
+    return max(K_CELLS, min(MAX_K_CELLS, math.ceil(n / float(TARGET_CELL_SIZE))))
 
 _SQD_SPARK = (
     "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
@@ -628,13 +625,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join by the candidate bound n·TARGET_CELL_SIZE/2 — its map
     # bytes are tiny and byte-target AQE coalescing otherwise folds
     # the whole cosine-scoring fan-out onto one task.
-    from streams_prototyping_spark.functions.similarity import _corpus_n
-
-    cand = _corpus_n(spark, sf_dir) * TARGET_CELL_SIZE // 2
-    dp = spark.sparkContext.defaultParallelism
-    a = a.repartition(
-        max(dp, min(-(-cand // 2_000_000), 65536)), "cell", "sub"
-    )
+    cand = table_n(spark, sf_dir, "embeddings") * TARGET_CELL_SIZE // 2
+    a = a.repartition(fanout_width(spark, cand, PAIRS_PER_TASK), "cell", "sub")
     x = a.alias("x")
     y = a.alias("y")
     dups = (

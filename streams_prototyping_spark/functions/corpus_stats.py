@@ -495,16 +495,19 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map bytes and cannot see the df² fan-out (measured: explicit
     # gram repartition 4.95 -> 3.91 s same-session). The count runs
     # once per (session, dataset) against the persisted stage.
-    from streams_prototyping_spark.data import dataset_cache_key
+    from streams_prototyping_spark.data import (
+        PAIRS_PER_TASK,
+        dataset_cache_key,
+        fanout_width,
+    )
 
     pkey = dataset_cache_key(sf_dir, "documents")
     if pkey not in _TFIDF_PARTS_CACHE:
         n_idx = w.filter(
             F.col("df").between(TFIDF_DF_MIN, TFIDF_DF_MAX)
         ).count()
-        dp = spark.sparkContext.defaultParallelism
-        _TFIDF_PARTS_CACHE[pkey] = max(
-            dp, min(n_idx * TFIDF_DF_MAX // 2 // 2_000_000 + 1, 65536)
+        _TFIDF_PARTS_CACHE[pkey] = fanout_width(
+            spark, n_idx * TFIDF_DF_MAX // 2, PAIRS_PER_TASK
         )
     pair_parts = _TFIDF_PARTS_CACHE[pkey]
     norms = w.groupBy("doc_id").agg(

@@ -306,16 +306,11 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-bucket fan-out, so the stage scoring every candidate
     # cosine collapsed to a handful of tasks. Scale-adaptive (corpus-
     # derived), not a local[32] constant.
-    from streams_prototyping_spark.functions.similarity import (
-        TARGET_BUCKET_OCC,
-        _corpus_n,
-    )
+    from streams_prototyping_spark.data import PAIRS_PER_TASK, fanout_width, table_n
+    from streams_prototyping_spark.functions.similarity import TARGET_BUCKET_OCC
 
-    cand = _corpus_n(spark, sf_dir) * min(TARGET_BUCKET_OCC, KNN_QUERY_CAP)
-    parts = max(
-        spark.sparkContext.defaultParallelism,
-        min(-(-cand // 2_000_000), 65536),
-    )
+    cand = table_n(spark, sf_dir, "embeddings") * min(TARGET_BUCKET_OCC, KNN_QUERY_CAP)
+    parts = fanout_width(spark, cand, PAIRS_PER_TASK)
     nbrs = bucketed.repartition(parts, "bucket").join(
         q.repartition(parts, "q_bucket"),
         (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),

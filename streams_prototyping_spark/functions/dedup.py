@@ -20,12 +20,16 @@ Jaccard runs only on LSH candidates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streams_prototyping_spark.data import load_table, widen
+from streams_prototyping_spark.data import (
+    PAIRS_PER_TASK,
+    fanout_width,
+    load_table,
+    table_n,
+    widen,
+)
 from streams_prototyping_spark.functions.portable_hash import (
     portable_hash64,
     portable_hash64_sql,
@@ -325,8 +329,6 @@ def _simhash_duck(bits: int) -> str:
 # pairs, all genuine replica-structure near-dups). The oracle can't
 # vary its expression count, so it always sums SIMHASH_MAX_BITS votes
 # and masks with % (1 << bits) — the low `bits` bits are identical.
-_SIMHASH_BITS_CACHE: dict = {}
-_DOC_N_CACHE: dict = {}
 
 _SIMHASH_BITS_DUCK = (
     f"GREATEST({SIMHASH_BITS}, LEAST({SIMHASH_MAX_BITS}, {SIMHASH_BITS} + "
@@ -338,38 +340,20 @@ _SIMHASH_PARAMS_DUCK = (
 )
 
 
-def _doc_n(spark: SparkSession, sf_dir: str) -> int:
-    """Document-corpus row count, cached per dataset signature (the
-    similarity._corpus_n pattern: an index builder knows its corpus
-    size; one count() job per session)."""
-    from streams_prototyping_spark.data import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "documents")
-    if key not in _DOC_N_CACHE:
-        _DOC_N_CACHE[key] = load_table(spark, sf_dir, "documents").count()
-    return _DOC_N_CACHE[key]
-
-
 def _simhash_bits(spark: SparkSession, sf_dir: str) -> int:
     """Fingerprint width for sf_dir (cached corpus count). Mirrors
     _SIMHASH_BITS_DUCK exactly: both engines compute
     ceil(log2(n / target)) on the same IEEE doubles, and the test SFs
     sit nowhere near a power-of-two boundary."""
-    from streams_prototyping_spark.data import dataset_cache_key
+    import math
 
-    key = dataset_cache_key(sf_dir, "documents")
-    if key not in _SIMHASH_BITS_CACHE:
-        import math
-
-        n = _doc_n(spark, sf_dir)
-        raw = (
-            SIMHASH_BITS
-            + 8 * math.ceil(math.log2(n / float(SIMHASH_TARGET_CORPUS)))
-            if n
-            else SIMHASH_BITS
-        )
-        _SIMHASH_BITS_CACHE[key] = max(SIMHASH_BITS, min(SIMHASH_MAX_BITS, raw))
-    return _SIMHASH_BITS_CACHE[key]
+    n = table_n(spark, sf_dir, "documents")
+    raw = (
+        SIMHASH_BITS + 8 * math.ceil(math.log2(n / float(SIMHASH_TARGET_CORPUS)))
+        if n
+        else SIMHASH_BITS
+    )
+    return max(SIMHASH_BITS, min(SIMHASH_MAX_BITS, raw))
 
 
 _SIMHASH_ORACLE = f"""
@@ -801,21 +785,6 @@ def _simhash_blocks(bits: int) -> tuple:
     return ((0, w), (w, w), (2 * w, bits - 2 * w))
 
 
-_SIMHASH_PAIRS_PER_TASK = 2_000_000  # the banded family's fold budget
-
-
-def _simhash_selfjoin_parts(spark: SparkSession, sf_dir: str) -> int:
-    """Reduce width for the block self-join from the uniform-hash
-    candidate bound Σ_blocks n²/2^(width+1) (clustered corpora exceed
-    it inside single hot keys, which partitioning cannot split anyway —
-    AQE skew-join handles those)."""
-    n = _doc_n(spark, sf_dir)
-    bits = _simhash_bits(spark, sf_dir)
-    cand = sum(n * n // (2 << width) for _, width in _simhash_blocks(bits))
-    dp = spark.sparkContext.defaultParallelism
-    return max(dp, min(-(-cand // _SIMHASH_PAIRS_PER_TASK), 65536))
-
-
 # Oracle block keys: widths/shifts derive from the adaptive `bits`
 # scalar (w = bits // 3); the top block needs no mod since fp < 2^bits.
 # fp is MATERIALIZED — blocks is referenced twice by the self-join and
@@ -879,18 +848,14 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # {bits}-vote fold subtree is inlined SIX times (3 union branches x
     # 2 join sides) and the fingerprint pass dominates the query; the
     # oracle's fp CTE is MATERIALIZED for exactly the same reason.
-    # SPARK_GRAFT_SIMHASH_BARRIER=0 rebuilds the fingerprints inline
-    # (the r10 shape) — the interleaved-A/B hook for the r11 driver
-    # regression adjudication (OPTIMIZATION_r12.md).
-    if os.environ.get("SPARK_GRAFT_SIMHASH_BARRIER", "1") == "0":
-        fp = simhash_fingerprint(spark, sf_dir)
-    else:
-        fp = shared_stage(
-            spark,
-            sf_dir,
-            "dedup/simhash_fp",
-            lambda: simhash_fingerprint(spark, sf_dir),
-        )
+    # Interleaved sf0.1 A/B against rebuilding the fingerprints inline
+    # (the r10 shape): barrier 2.78 s vs inline 2.97 s (OPTIMIZATION_r12.md).
+    fp = shared_stage(
+        spark,
+        sf_dir,
+        "dedup/simhash_fp",
+        lambda: simhash_fingerprint(spark, sf_dir),
+    )
     bits = _simhash_bits(spark, sf_dir)
     blocks = None
     for bi, (shift, width) in enumerate(_simhash_blocks(bits)):
@@ -903,15 +868,21 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         blocks = part if blocks is None else blocks.unionByName(part)
     # r12 (guide §2.5, the banded-family idiom): derive the self-join
-    # reduce width from the expected-candidate bound Σ n²/2^(w+1) per
-    # block — the fingerprint rows are tiny (~16 B/doc), so with
+    # reduce width from the uniform-hash candidate bound Σ n²/2^(w+1)
+    # per block — the fingerprint rows are tiny (~16 B/doc), so with
     # byte-target AQE coalescing (session.py parallelismFirst=false)
     # the exchange collapses to ONE task while the join fans out
     # n²/2^w XOR-popcount verifications (measured: 3.4 s -> 6.6 s
-    # without this). Floor at defaultParallelism, cap vs absurd n.
-    blocks = blocks.repartition(
-        _simhash_selfjoin_parts(spark, sf_dir), "b", "block_key"
+    # without this). Clustered corpora exceed the bound inside single
+    # hot keys, which partitioning cannot split anyway — AQE skew-join
+    # handles those.
+    n = table_n(spark, sf_dir, "documents")
+    parts = fanout_width(
+        spark,
+        sum(n * n // (2 << width) for _, width in _simhash_blocks(bits)),
+        PAIRS_PER_TASK,
     )
+    blocks = blocks.repartition(parts, "b", "block_key")
     a = blocks.alias("a")
     b = blocks.alias("b")
     # r12 (guide §2.3/§2.5): verify hamming BEFORE the cross-block
@@ -938,9 +909,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("hamming"),
         )
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .repartition(
-            _simhash_selfjoin_parts(spark, sf_dir), "doc_a", "doc_b"
-        )
+        .repartition(parts, "doc_a", "doc_b")
         .distinct()
     )
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streams_prototyping_spark.data import load_table
+from streams_prototyping_spark.data import load_table, table_n
 from streams_prototyping_spark.functions.portable_hash import (
     PORTABLE_HASH64_DUCK_TPL,
 )
@@ -58,18 +58,11 @@ FS_TARGET_BLOCK = 32
 FS_N_NATIONS = 25
 FS_ACCTBAL_SPAN = 11000  # c_acctbal ∈ [-999.99, 9999.99]
 
-_FS_BW_CACHE: dict = {}
-
 
 def _fs_block_width(spark: SparkSession, sf_dir: str) -> int:
-    from streams_prototyping_spark.data import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "customer")
-    if key not in _FS_BW_CACHE:
-        n = load_table(spark, sf_dir, "customer").count()
-        bands = max(1, n // (FS_N_NATIONS * FS_TARGET_BLOCK))
-        _FS_BW_CACHE[key] = max(1, FS_ACCTBAL_SPAN // bands)
-    return _FS_BW_CACHE[key]
+    n = table_n(spark, sf_dir, "customer")
+    bands = max(1, n // (FS_N_NATIONS * FS_TARGET_BLOCK))
+    return max(1, FS_ACCTBAL_SPAN // bands)
 
 
 _FS_BW_SQL = (
@@ -673,18 +666,10 @@ def greedy_match_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    # r12 A/B hook (VERDICT r11 item 7): SPARK_GRAFT_MATCH_CKPT_EVERY=2
-    # checkpoints only every 2nd round (lineage doubles, blocking
-    # actions halve) — measured numbers in OPTIMIZATION_r12.md.
-    import os
-
-    ckpt_every = int(os.environ.get("SPARK_GRAFT_MATCH_CKPT_EVERY", "1"))
-
-    def _ckpt(df: DataFrame, r: int) -> DataFrame:
-        if r % ckpt_every == 0 or r == MATCH_ROUNDS:
-            return df.localCheckpoint()
-        return df
-
+    # Every round checkpoints all three tables: an r12 same-session A/B
+    # against checkpointing only every 2nd round (lineage doubles,
+    # blocking actions halve) read 2.27 s med vs 6.77 s med
+    # (OPTIMIZATION_r12.md).
     out = None
     p = pairs
     for r in range(1, MATCH_ROUNDS + 1):
@@ -717,11 +702,11 @@ def greedy_match_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         # .unpersist() is a NO-OP for localCheckpoint blocks (ADVICE
         # r5: it only consults the SQL cache manager); at sf10 three
         # live generations of 40M-row rank tables OOM'd the heap.
-        best = _ckpt(
+        best = (
             d.select("u", "v", "score", F.row_number().over(wu).alias("rn"))
             .filter(F.col("rn") == 1)
-            .select("u", "v", "score"),
-            r,
+            .select("u", "v", "score")
+            .localCheckpoint()
         )
         x = best.alias("x")
         y = best.alias("y")
@@ -737,7 +722,7 @@ def greedy_match_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("x.score").alias("score"),
             )
         )
-        m = _ckpt(m, r)
+        m = m.localCheckpoint()
         release_local_checkpoint(best)
         tagged = m.select("id_a", "id_b", "score", F.lit(r).cast("long").alias("round"))
         out = tagged if out is None else out.unionAll(tagged)
@@ -745,11 +730,11 @@ def greedy_match_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             m.select(F.col("id_a").alias("rec"))
             .union(m.select(F.col("id_b").alias("rec")))
         )
-        p_next = _ckpt(
+        p_next = (
             p.join(matched.withColumnRenamed("rec", "id_a"), "id_a", "left_anti")
             .join(matched.withColumnRenamed("rec", "id_b"), "id_b", "left_anti")
-            .select("id_a", "id_b", "score"),
-            r,
+            .select("id_a", "id_b", "score")
+            .localCheckpoint()
         )
         if r > 1:  # round-0 pairs is plain lineage, nothing to free
             release_local_checkpoint(p)

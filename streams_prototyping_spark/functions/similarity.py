@@ -27,7 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from streams_prototyping_spark.data import load_table
+from streams_prototyping_spark.data import (
+    PAIRS_PER_TASK,
+    fanout_width,
+    load_table,
+    table_n,
+)
 from streams_prototyping_spark.registry import register
 from streams_prototyping_spark.stage_cache import shared_stage
 
@@ -224,40 +229,16 @@ bucketed AS (
 )
 """
 
-_LSH_BITS_CACHE: dict = {}
-_CORPUS_N_CACHE: dict = {}
-
-
-def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    """Embedding-corpus row count, cached per dataset signature (the
-    same per-session scalar memo _lsh_bits always used — an index
-    builder knows its corpus size; mtime keying invalidates on
-    dataset rebuild). One count() job per session instead of one per
-    query construction (r11: the banded audit alone paid 3 of them
-    per bench invocation)."""
-    from streams_prototyping_spark.data import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "embeddings")
-    if key not in _CORPUS_N_CACHE:
-        _CORPUS_N_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _CORPUS_N_CACHE[key]
-
-
 def _lsh_bits(spark: SparkSession, sf_dir: str) -> int:
     """Index depth for sf_dir (cached count — an index builder knows
     its corpus size). Mirrors _NB_EXPR_DUCK exactly: both engines
     compute ceil(log2(n / target)) on the same IEEE doubles, and the
     test SFs sit nowhere near a power-of-two boundary."""
-    from streams_prototyping_spark.data import dataset_cache_key
+    import math
 
-    key = dataset_cache_key(sf_dir, "embeddings")
-    if key not in _LSH_BITS_CACHE:
-        import math
-
-        n = _corpus_n(spark, sf_dir)
-        raw = math.ceil(math.log2(n / float(TARGET_BUCKET_OCC))) if n else 0
-        _LSH_BITS_CACHE[key] = max(LSH_BITS, min(MAX_LSH_BITS, raw))
-    return _LSH_BITS_CACHE[key]
+    n = table_n(spark, sf_dir, "embeddings")
+    raw = math.ceil(math.log2(n / float(TARGET_BUCKET_OCC))) if n else 0
+    return max(LSH_BITS, min(MAX_LSH_BITS, raw))
 
 
 def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,9 +425,8 @@ def _near_dup_pairs(
         # bound n·occ/2 instead. The within (audit-sample) case stays
         # AQE-scheduled: occupancy drops with the sample and the join
         # is sample-sized (same A/B-settled rule as the banded family).
-        cand = _corpus_n(spark, sf_dir) * TARGET_BUCKET_OCC // 2
-        dp = spark.sparkContext.defaultParallelism
-        parts = max(dp, min(-(-cand // 2_000_000), 65536))
+        cand = table_n(spark, sf_dir, "embeddings") * TARGET_BUCKET_OCC // 2
+        parts = fanout_width(spark, cand, PAIRS_PER_TASK)
         subbed = subbed.repartition(parts, "bucket", "sub")
     a = subbed.alias("a")
     b = subbed.alias("b")
@@ -566,7 +546,7 @@ def near_dup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_prototyping_spark.functions.portable_hash import portable_hash64
 
     vecs = _vectors(spark, sf_dir)
-    n = _corpus_n(spark, sf_dir)
+    n = table_n(spark, sf_dir, "embeddings")
     thresh = float(_TWO60) * NDR_SAMPLE / n
     smp = vecs.filter(
         portable_hash64(
@@ -597,7 +577,7 @@ def near_dup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   work is O(sample²)-shaped, provably the same found set;
     # - the three scalar actions (sample count / truth count / found
     #   stats) collapse into ONE crossJoined single-row action, so the
-    #   audit pays one job instead of three (plus _corpus_n's session-
+    #   audit pays one job instead of three (plus table_n's session-
     #   cached scalar instead of a count() per construction).
     found = _near_dup_pairs(
         spark, sf_dir, within=smp.select("vec_id")

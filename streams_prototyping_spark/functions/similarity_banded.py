@@ -82,7 +82,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from streams_prototyping_spark.data import load_table
+from streams_prototyping_spark.data import (
+    PAIRS_PER_TASK,
+    fanout_width,
+    load_table,
+    table_n,
+)
 from streams_prototyping_spark.functions.portable_hash import (
     PORTABLE_HASH64_DUCK_TPL,
     portable_hash64,
@@ -100,7 +105,6 @@ from streams_prototyping_spark.functions.similarity import (
     MAX_LSH_BITS,
     NEAR_DUP_MIN_COS,
     TARGET_BUCKET_OCC,
-    _corpus_n,
     _lsh_bits,
     _vectors,
 )
@@ -403,23 +407,7 @@ def _banded_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # left to AQE — AQE coalesces by MAP-output bytes (the narrow index
 # rows: ~1.5 MB at sf0.1) and cannot see the ~occ× join fan-out, so
 # the stage that scores every candidate cosine collapsed to ONE task
-# (measured: 1 partition, 1.8M pairs scored serially). ~2M scored
-# pairs per task ≈ 1-2 s of fold CPU; the cap only guards absurd
-# corpus sizes (2B vectors · 123 bands → ~16k tasks, not millions).
-_CAND_PER_TASK = 2_000_000
-
-
-def _selfjoin_parts(spark: SparkSession, sf_dir: str) -> int:
-    cand = (
-        _corpus_n(spark, sf_dir)
-        * _nbands(spark, sf_dir)
-        * TARGET_BUCKET_OCC
-        // 2
-    )
-    dp = spark.sparkContext.defaultParallelism
-    return max(dp, min(-(-cand // _CAND_PER_TASK), 65536))
-
-
+# (measured: 1 partition, 1.8M pairs scored serially).
 def _apply_selfjoin_parts(
     df: DataFrame, spark: SparkSession, sf_dir: str,
     n_within: int | None = None,
@@ -440,19 +428,13 @@ def _apply_selfjoin_parts(
       ~occ·s/n (≈1 at production corpus sizes), so per-row fan-out is
       uniform and AQE's bytes-proportional coalescing is the right
       scheduler; a corpus-derived width only pays per-task overhead
-      on a sample-sized join.
-
-    SPARK_GRAFT_BANDED_PARTS overrides for A/Bs: "aqe" (never
-    repartition — the r10 shape) or an integer width."""
-    mode = os.environ.get("SPARK_GRAFT_BANDED_PARTS", "bound")
-    if mode == "aqe":
+      on a sample-sized join."""
+    n = table_n(spark, sf_dir, "embeddings")
+    if n_within is not None and n_within < n:
         return df
-    if mode.isdigit():
-        return df.repartition(int(mode), "band", "bucket", "ext", "sub")
-    if n_within is not None and n_within < _corpus_n(spark, sf_dir):
-        return df
+    cand = n * _nbands(spark, sf_dir) * TARGET_BUCKET_OCC // 2
     return df.repartition(
-        _selfjoin_parts(spark, sf_dir), "band", "bucket", "ext", "sub"
+        fanout_width(spark, cand, PAIRS_PER_TASK), "band", "bucket", "ext", "sub"
     )
 
 
@@ -635,7 +617,7 @@ def _banded_pairs(
         # SQ8_BROADCAST_MAX_VECS the broadcast stops being sane and the
         # plain shuffle join is the cluster answer (spread across
         # executors' disks). Join strategy never changes the output.
-        if _corpus_n(spark, sf_dir) <= SQ8_BROADCAST_MAX_VECS:
+        if table_n(spark, sf_dir, "embeddings") <= SQ8_BROADCAST_MAX_VECS:
             va, vb = F.broadcast(va), F.broadcast(vb)
         return (
             cand.join(va, "vec_a")
@@ -809,7 +791,7 @@ def _recall_rows(
     scripts/near_dup_banded_recall.py can re-run the SAME code path at
     an explicit wider sample for extra statistical margin."""
     vecs = _vectors(spark, sf_dir)
-    n = _corpus_n(spark, sf_dir)
+    n = table_n(spark, sf_dir, "embeddings")
     if n_sample is None:
         n_sample = ndb_sample_for(n)
     thresh = float(_TWO60) * n_sample / n

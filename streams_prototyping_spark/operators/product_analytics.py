@@ -623,12 +623,9 @@ def copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum(basket²) pair explode + partial pair agg on ONE task
     # (isolated A/B: 1.72 s -> 2.66 s). Rows-derived width keeps every
     # core on the fan-out stage and grows with the data.
-    from streams_prototyping_spark.data import table_n
+    from streams_prototyping_spark.data import fanout_width, table_n
 
-    dp = spark.sparkContext.defaultParallelism
-    parts_n = max(
-        dp, min(-(-table_n(spark, sf_dir, "lineitem") // 50_000), 65536)
-    )
+    parts_n = fanout_width(spark, table_n(spark, sf_dir, "lineitem"), 50_000)
     bl = li.repartition(parts_n, "l_orderkey").groupBy("l_orderkey").agg(
         F.sort_array(F.collect_set("l_partkey")).alias("parts")
     )

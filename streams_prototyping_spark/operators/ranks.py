@@ -38,7 +38,6 @@ ranks derive algebraically: ``cum_desc(v) = n - cum_before(v)``.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
@@ -52,12 +51,9 @@ from pyspark.sql import functions as F
 # equidepth 1.37 -> 1.86 s, psi 1.50 -> 2.16 s — while at sf100-scale
 # domains (millions of distinct values) the single task is the
 # asymptotic bottleneck the round-5 verdict flagged. Both shapes are
-# oracle-verified (SPARK_GRAFT_TWO_LEVEL_MIN_ROWS=0 forces the
-# two-level path at any SF; the full-registry contract was run green
-# both ways at sf0.01).
-TWO_LEVEL_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TWO_LEVEL_MIN_ROWS", "4000000")
-)
+# oracle-verified (setting this to 0 forces the two-level path at any
+# SF; the full-registry contract was run green both ways at sf0.01).
+TWO_LEVEL_MIN_ROWS = 4_000_000
 
 
 def value_cum_counts(df: DataFrame, value_col: str) -> DataFrame:

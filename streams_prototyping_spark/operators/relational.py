@@ -859,13 +859,11 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan-out), so it grows with data instead of pinning a local
     # constant. Repartitioning both sides on the composite join key
     # means the join reuses these exchanges (no extra shuffle).
-    from streams_prototyping_spark.data import table_n
+    from streams_prototyping_spark.data import fanout_width, table_n
 
-    _dp = spark.sparkContext.defaultParallelism
     _parts = max(
-        _dp,
         SALT_BUCKETS,
-        min(-(-table_n(spark, sf_dir, "lineitem") // 50_000), 65536),
+        fanout_width(spark, table_n(spark, sf_dir, "lineitem"), 50_000),
     )
     fact = fact.repartition(_parts, "salt", "l_orderkey")
     dim = dim.repartition(_parts, "salt", "o_orderkey")

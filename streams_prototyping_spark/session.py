@@ -61,11 +61,9 @@ def get_spark(
         # compute-dense low-byte stages (the banded/knn/tfidf fan-out
         # joins) keep their explicit candidate-bound repartitions,
         # which AQE never coalesces (REPARTITION_BY_NUM). A/B evidence
-        # in OPTIMIZATION_r12.md.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
+        # in OPTIMIZATION_r12.md; SPARK_GRAFT_EXTRA_CONF (applied last)
+        # overrides this and the next conf for a probe.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         # r12: let AQE coalesce the plan that gets CACHED — persisted
         # shared stages (word_tf, tfidf_postings, banded_index, ...)
         # otherwise freeze their pre-AQE 2x-cores partition layout, and
@@ -73,10 +71,7 @@ def get_spark(
         # task per cached partition (measured: a 2-stage agg over the
         # 116k-row word_tf cache cost 1.4 s; probe in
         # OPTIMIZATION_r12.md).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # r11 NOTE (measured, guide §3.1): preferSortMergeJoin=false
         # (shuffled-hash when sizes allow) was tried and REJECTED —
         # isolated A/B over 10 join-heavy queries read uniformly slower

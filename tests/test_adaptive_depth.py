@@ -149,3 +149,61 @@ def test_simhash_blocks_partition_every_width():
             covered += width
         assert covered == bits
     assert dedup._simhash_blocks(16) == ((0, 5), (5, 5), (10, 6))
+
+
+# ------------------------------------------ fan-out width and row counts
+
+
+def test_fanout_width_floor_ceil_and_cap():
+    """data.fanout_width: ceil(est / per_task), never below the core
+    count, never above 65536 tasks."""
+    from types import SimpleNamespace
+
+    from streams_prototyping_spark.data import PAIRS_PER_TASK, fanout_width
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    # floor: a tiny (or empty) estimate still uses every core
+    assert fanout_width(spark, 0, PAIRS_PER_TASK) == 4
+    assert fanout_width(spark, 1, PAIRS_PER_TASK) == 4
+    assert fanout_width(spark, 4 * PAIRS_PER_TASK, PAIRS_PER_TASK) == 4
+    # ceil division: an exact multiple adds no task, one row more does
+    assert fanout_width(spark, 10 * PAIRS_PER_TASK, PAIRS_PER_TASK) == 10
+    assert fanout_width(spark, 10 * PAIRS_PER_TASK + 1, PAIRS_PER_TASK) == 11
+    assert fanout_width(spark, 600_001, 50_000) == 13
+    # cap: absurd estimates stop at 65536 tasks
+    assert fanout_width(spark, 65536 * 50_000, 50_000) == 65536
+    assert fanout_width(spark, 10**18, PAIRS_PER_TASK) == 65536
+
+
+def test_one_count_per_table(spark, sf_dir, tmp_path):
+    """The LSH depth and the k-means K both derive from the embeddings
+    row count, and data.table_n is its one memo: on a fresh dataset
+    key, resolving both costs exactly the jobs of ONE load + count()
+    (a parquet load infers its schema with a job of its own, and the
+    count runs as AQE stages, so one count is more than one job)."""
+    import shutil
+
+    from streams_prototyping_spark.data import load_table
+    from streams_prototyping_spark.functions import clustering, similarity
+
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        d = tmp_path / tag
+        d.mkdir()
+        shutil.copy(f"{sf_dir}/embeddings.parquet", d / "embeddings.parquet")
+        group = f"one-count-{tmp_path.name}-{tag}"
+        sc.setJobGroup(group, "table_n memo")
+        try:
+            fn(str(d))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_count = jobs("ref", lambda d: load_table(spark, d, "embeddings").count())
+    both = jobs(
+        "memo",
+        lambda d: (similarity._lsh_bits(spark, d), clustering._k_cells(spark, d)),
+    )
+    assert one_count > 0
+    assert both == one_count

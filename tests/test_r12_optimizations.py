@@ -11,9 +11,9 @@ oracle gate:
 - simhash_near_pairs: filtering hamming BEFORE the cross-block distinct
   (on the narrow (doc_a, doc_b, hamming) projection) yields the same
   pair set as dedup-then-filter on the fingerprint-carrying rows.
-- stats-audit two-level gate: the bucketed prefix-sum path (forced via
-  SPARK_GRAFT_TWO_LEVEL_MIN_ROWS=0) emits row-identical output to the
-  single-window path for equidepth / point_in_range / psi.
+- stats-audit two-level gate: the bucketed prefix-sum path (forced by
+  monkeypatching ranks.TWO_LEVEL_MIN_ROWS to 0) emits row-identical
+  output to the single-window path for equidepth / point_in_range / psi.
 """
 
 from __future__ import annotations
