@@ -138,8 +138,9 @@ def main() -> None:
     results = []
     # App 1: windowed AVG aggregation (Aggregations.java topology) —
     # sized via the production start_stateful path (state here is one
-    # row per open 30 s window, so the conservative rate-x-horizon
-    # estimate still lands on the parallelism floor)
+    # row per open 30 s window, but the conservative rate-x-horizon
+    # estimate counts every input row, so the volume term alone picks
+    # the count)
     results.append(
         probe(
             "windowed_avg_stream",
@@ -163,30 +164,13 @@ def main() -> None:
     # state (insert + probe + watermark eviction), the heaviest per-row
     # work in the engine; a 60 s watermark bounds buffered state to
     # ~2 min of stream on each side.
-    # State partitions are sized from estimated state volume, not core
-    # count (round-5 A/B: per-batch commit overhead scales with
-    # partitions; see streaming/state_sizing.py) — via start_stateful,
-    # the same call path production pipelines use, so this probe row IS
-    # the evidence the engine lands on the winning cell by itself.
-    from streams_prototyping_spark.streaming.state_sizing import (
-        estimate_join_state_rows,
-        recommended_state_partitions,
-    )
-
-    est = estimate_join_state_rows(
-        RATE // 5 + RATE // 15, watermark_seconds=60,
-        join_window_seconds=60, n_sides=1,
-    )
-    print(
-        json.dumps(
-            {
-                "state_partitions": recommended_state_partitions(est),
-                "est_state_rows": est,
-                "sized_via": "start_stateful",
-            }
-        )
-    )
-
+    # State partitions are sized from estimated state volume and the
+    # per-row state rate, not core count (see streaming/state_sizing.py)
+    # — via start_stateful, the same call path production pipelines
+    # use, so this probe row IS the evidence the engine lands on the
+    # winning cell by itself (the probe row records the count it
+    # pinned). Rates are passed PER SIDE, as start_stateful expects
+    # for n_sides=2.
     imps = _rate_events(spark, RATE // 5).select(
         F.col("ts").alias("imp_ts"),
         F.col("event_id").alias("impression_id"),
@@ -203,7 +187,12 @@ def main() -> None:
             "ads_with_clicks_stream",
             ads_with_clicks_stream(imps, clicks, watermark="60 seconds"),
             output_mode="append",  # stream-stream outer joins are append-only
-            sizing={"est_state_rows": est},
+            sizing={
+                "rows_per_second": (RATE // 5 + RATE // 15) / 2,
+                "watermark_seconds": 60,
+                "join_window_seconds": 60,
+                "n_sides": 2,
+            },
         )
     )
 

@@ -8,29 +8,48 @@ with the partition count while per-row work does not. 8 state
 partitions sustained ~268k rows/s where 32 (the core count — the
 default everyone picks) managed ~142k.
 
-This module turns that recorded production rule into code: pick
+This module turns that rule into code: pick
 ``spark.sql.shuffle.partitions`` for a stateful query from the
-ESTIMATED STATE VOLUME, not from the core count.
+ESTIMATED STATE VOLUME and, for a stream-stream join, from the rate at
+which rows enter state — never from a fixed floor or the core count.
 
 The sizing rule
 ---------------
-    partitions = clamp(ceil(state_bytes / target_partition_bytes),
-                       min_partitions, max_partitions)
+    volume  = ceil(est_state_rows x row_width / TARGET_PARTITION_BYTES)
+    per_row = min(cores, ceil(rows_per_second x n_sides
+                              / JOIN_STATE_ROWS_PER_S_PER_PARTITION))
+              (stream-stream joins, n_sides == 2, only; else 0)
+    partitions = clamp(max(volume, per_row, 1), 1, MAX_PARTITIONS)
 
-- ``state_bytes`` = estimated resident state rows x row width. For a
+- ``est_state_rows`` = estimated resident state rows. For a
   watermarked aggregate, rows ~ open windows x keys; for a
   stream-stream join, rows ~ (watermark + join window) seconds x input
   rows/second summed over both sides (symmetric-hash keeps both).
-- ``target_partition_bytes`` (default 256 MiB): err LOW on partition
-  count. The round-6 --tuned measurement showed the commit-cost curve
-  is much steeper than a naive bytes-per-partition model — at ~2M
-  resident rows, 16 partitions measured 140k rows/s (per-batch commit
-  12.4s summed) vs 8 partitions at 221k (2.7s): halving partitions
-  quartered commit cost. 256 MiB per partition is comfortably inside
-  both providers' per-store capacity and keeps the count minimal.
-- ``min_partitions`` (default 8) is the parallelism floor: state
-  insert/probe is CPU work that still wants several cores even when
-  the state is tiny (the A/B's winning cell).
+- ``TARGET_PARTITION_BYTES`` (256 MiB): err LOW on partition count.
+  The round-6 --tuned measurement showed the commit-cost curve is much
+  steeper than a naive bytes-per-partition model — at ~2M resident
+  rows, 16 partitions measured 140k rows/s (per-batch commit 12.4 s
+  summed) vs 8 partitions at 221k (2.7 s): halving partitions quartered
+  commit cost.
+- The per-row term exists because every join row is inserted into AND
+  probed against state inside the state partitions: a fast join wants
+  more than one core even when its state is small. Round-13 A/B on
+  4 cores (BASELINE.md, HDFS provider, median of 4 samples): at 26.7k
+  join rows/s offered, 1 partition sustained ~26k rows/s, 2 -> 42k,
+  4 -> 34k, 8 -> 28k; at 107k offered, 1 -> 76-85k, 2 -> 107k,
+  4 -> 108k, 8 -> 107k. 25k state rows/s per partition, capped at the
+  core count, picks 2 and 4: the winner at 26.7k, and a tie with 2 and
+  8 (inside the 96-118k run-to-run spread) at 107k.
+- Aggregates get NO per-row term: they partially aggregate before the
+  state exchange, so state sees one row per (window x key) per task,
+  not one per input row. The windowed AVG at 1M rows/s offered held
+  1-2 state rows and sustained 2.5M rows/s on 1 partition, 3.0-3.3M
+  on 2 and 1.0-2.1M on 8.
+
+There is no parallelism floor. The old floor of 8 gave the reference
+AVG 8 state stores for 1-2 state rows: ~9 s of summed state commit
+over 6 triggers, all of it fixed per-partition cost (1 partition:
+~0.5 s).
 
 CAVEAT (fixed-at-first-checkpoint): Spark pins the state partition
 count at the FIRST checkpoint of a query; changing
@@ -53,8 +72,10 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.streaming import StreamingQuery
 
 TARGET_PARTITION_BYTES = 256 << 20  # 256 MiB of state per partition
-MIN_PARTITIONS = 8
 MAX_PARTITIONS = 512
+# State rows (inserted + probed) per second one join state partition
+# keeps up with; from the round-13 4-core A/B in the module docstring.
+JOIN_STATE_ROWS_PER_S_PER_PARTITION = 25_000
 
 # Provider crossover (BASELINE.md, round-6 soak): the HDFS-backed
 # provider is ~2x faster while resident state sits safely under the
@@ -158,29 +179,48 @@ def estimate_join_state_rows(
 def recommended_state_partitions(
     est_state_rows: int,
     row_width_bytes: int = 64,
-    target_partition_bytes: int = TARGET_PARTITION_BYTES,
-    min_partitions: int = MIN_PARTITIONS,
-    max_partitions: int = MAX_PARTITIONS,
+    *,
+    rows_per_second: float = 0.0,
+    n_sides: int = 1,
+    cores: int,
 ) -> int:
-    """Partition count such that each partition holds ~target bytes of
-    state — the A/B-derived rule (commit overhead scales with
-    partitions; memory/skew pressure bounds partition size from the
-    other side)."""
+    """State partition count: the larger of the volume term (each
+    partition holds at most ~TARGET_PARTITION_BYTES of state) and, for
+    a stream-stream join (``n_sides == 2``), the per-row term
+    (``rows_per_second`` PER SIDE x ``n_sides`` state rows/s over
+    JOIN_STATE_ROWS_PER_S_PER_PARTITION, capped at ``cores``). See the
+    module docstring for the measurements behind both."""
     state_bytes = max(0, est_state_rows) * row_width_bytes
-    need = math.ceil(state_bytes / target_partition_bytes) if state_bytes else 0
-    return max(min_partitions, min(max_partitions, need))
+    volume = math.ceil(state_bytes / TARGET_PARTITION_BYTES)
+    per_row = 0
+    if n_sides == 2 and rows_per_second > 0:
+        per_row = min(
+            cores,
+            math.ceil(
+                rows_per_second * n_sides / JOIN_STATE_ROWS_PER_S_PER_PARTITION
+            ),
+        )
+    return min(MAX_PARTITIONS, max(volume, per_row, 1))
 
 
 def configure_stateful_shuffle(
     spark: SparkSession,
     est_state_rows: int,
     row_width_bytes: int = 64,
-    **kwargs: int,
+    rows_per_second: float = 0.0,
+    n_sides: int = 1,
 ) -> int:
     """Set ``spark.sql.shuffle.partitions`` for a stateful query about
     to start on a FRESH checkpoint (see module caveat) and return the
-    chosen count."""
-    n = recommended_state_partitions(est_state_rows, row_width_bytes, **kwargs)
+    chosen count. The per-row term is capped at the session's
+    ``defaultParallelism``."""
+    n = recommended_state_partitions(
+        est_state_rows,
+        row_width_bytes,
+        rows_per_second=rows_per_second,
+        n_sides=n_sides,
+        cores=spark.sparkContext.defaultParallelism,
+    )
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n
 
@@ -203,18 +243,18 @@ def start_stateful(
     options: Optional[dict] = None,
 ) -> "StreamingQuery":
     """THE production entry point for a stateful streaming pipeline:
-    size the state partitions from the estimated state volume, THEN
-    start the query — closing the gap the r6 verdict flagged, where
-    the measured 2x partition-sizing rule (BASELINE.md A/B: 8
-    partitions ~220k rows/s vs ~140k at the 16/32 core-count default)
-    lived only in the probe scripts while the pipeline builders
-    started on whatever the session default happened to be, pinned
-    forever at the first checkpoint.
+    size the state partitions from the estimated state volume and, for
+    a stream-stream join, the per-row state rate (module docstring),
+    THEN start the query — so pipelines never start on whatever the
+    session default happens to be, pinned forever at the first
+    checkpoint.
 
     State estimate: pass ``est_state_rows`` directly, or the workload
     facts (``rows_per_second`` PER SIDE + ``watermark_seconds`` [+
     ``join_window_seconds``, ``n_sides=2`` for a stream-stream join])
     and the helper derives it via :func:`estimate_join_state_rows`.
+    ``rows_per_second`` with ``n_sides=2`` also drives the join's
+    per-row term, even when ``est_state_rows`` is given.
 
     The same estimate also drives the state-store PROVIDER choice
     (``provider="auto"``, the default): HDFS-backed under half-heap
@@ -238,10 +278,13 @@ def start_stateful(
     ``spark.sql.shuffle.partitions``: micro-batch 0 plans
     asynchronously after ``start()`` returns and reads the session
     conf at that point — restoring immediately would race the very
-    setting this function exists to apply. Run batch work in the same
-    process from a separate ``spark.newSession()`` (shared
-    SparkContext, independent SQLConf) if the low stateful count would
-    hurt it; AQE makes the batch side largely insensitive anyway.
+    setting this function exists to apply. The count it leaves behind
+    can be as low as 1 (tiny state, slow or aggregate-only input), so
+    any batch work run in the same session afterwards plans its
+    shuffles with ONE partition: a serial, possibly spilling stage.
+    Run batch work after a stream start from ``spark.newSession()``
+    (shared SparkContext, independent SQLConf), and have tests restore
+    the previous value in a ``finally``.
     """
     if est_state_rows is None:
         if rows_per_second is None:
@@ -252,7 +295,9 @@ def start_stateful(
             rows_per_second, watermark_seconds, join_window_seconds, n_sides
         )
     spark = df.sparkSession
-    configure_stateful_shuffle(spark, est_state_rows, row_width_bytes)
+    configure_stateful_shuffle(
+        spark, est_state_rows, row_width_bytes, rows_per_second or 0.0, n_sides
+    )
     # Provider crossover (BASELINE.md rule, engine behavior as of r7):
     # 'auto' picks HDFS under half-heap state and RocksDB past it —
     # the HDFS ceiling is JVM death, not degradation, so the flip must

@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 
 from streams_prototyping_spark import registry
 from streams_prototyping_spark.data import load_table
+from streams_prototyping_spark.functions.portable_hash import portable_hash64_py
 from streams_prototyping_spark.plans.introspect import plan_facts
 
 registry.load_all()
@@ -114,6 +115,15 @@ def test_fs_linkage_pair_conservation(spark, sf_dir):
     assert total == want
 
 
+def _sub_block(rid, nsub):
+    """The engine's sub-block key (records._fs_recs_build): the portable
+    hash of the id, then Spark's % (the sign follows the dividend,
+    unlike Python's)."""
+    h = portable_hash64_py(str(rid))
+    r = abs(h) % nsub
+    return -r if h < 0 else r
+
+
 def _sub_block_sizes(spark, sf_dir):
     """Independent recomputation of the two-level blocking (adaptive
     band width + size-cap sub-blocking): (nation, band, sub) -> size."""
@@ -135,7 +145,7 @@ def _sub_block_sizes(spark, sf_dir):
     for (nat, bb), rids in blocks.items():
         nsub = max(1, (len(rids) + FS_TARGET_BLOCK - 1) // FS_TARGET_BLOCK)
         for rid in rids:
-            k = (nat, bb, rid % nsub)
+            k = (nat, bb, _sub_block(rid, nsub))
             sizes[k] = sizes.get(k, 0) + 1
     return sizes
 
@@ -241,7 +251,7 @@ def test_greedy_match_is_one_to_one_and_mutual_best(spark, sf_dir):
     for (nat, bb), grp in coarse.items():
         nsub = max(1, (len(grp) + FS_TARGET_BLOCK - 1) // FS_TARGET_BLOCK)
         for r in grp:
-            by_block.setdefault((nat, bb, r.rid % nsub), []).append(r)
+            by_block.setdefault((nat, bb, _sub_block(r.rid, nsub)), []).append(r)
     for grp in by_block.values():
         grp.sort(key=lambda r: r.rid)
         for i in range(len(grp)):

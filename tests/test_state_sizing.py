@@ -1,15 +1,19 @@
 """State-partition auto-sizing (VERDICT r5 item 4): the round-5 A/B
 proved stateful-query throughput is per-batch state-COMMIT-bound — 8
-state partitions ~2x the throughput of 32 on the same workload. These
-tests pin the rule that turns that finding into code."""
+state partitions ~2x the throughput of 32 on the same workload; the
+round-13 4-core A/B found counts below 8 winning or tying too, with a
+stream-stream join wanting one partition per ~25k state rows/s. These
+tests pin the rule that turns those findings into code."""
 
 from streams_prototyping_spark.streaming.state_sizing import (
     MAX_PARTITIONS,
-    MIN_PARTITIONS,
     configure_stateful_shuffle,
     estimate_join_state_rows,
     recommended_state_partitions,
 )
+
+# The round-13 A/B cells were measured on a 4-core box.
+AB_CORES = 4
 
 
 def test_estimate_join_state_rows():
@@ -20,39 +24,82 @@ def test_estimate_join_state_rows():
 
 
 def test_small_state_gets_the_ab_winner_not_the_core_count():
-    """The A/B regime: ~2M resident rows x 64 B = 128 MiB of state.
-    The rule must pick the low-partition configuration (the measured
-    ~268k rows/s cell), NOT the 32-core default (the ~142k cell)."""
-    n = recommended_state_partitions(2_000_000, row_width_bytes=64)
-    assert n == MIN_PARTITIONS  # 128 MiB needs 2 partitions; floor = 8
-    assert n < 32
+    """No floor: zero or tiny state commits one state store per batch,
+    not 8 and not the core count. The reference AVG (500 rows/s, 10 s
+    watermark -> 5k rows) and join (100 rows/s per side, 70 s horizon
+    -> 14k rows) both land on 1; so does the r5 A/B's ~2M resident
+    rows (128 MiB, under one 256 MiB partition) sized by volume alone."""
+    assert recommended_state_partitions(0, 64, cores=AB_CORES) == 1
+    assert recommended_state_partitions(
+        5_000, 64, rows_per_second=500, n_sides=1, cores=AB_CORES
+    ) == 1
+    assert recommended_state_partitions(
+        14_000, 64, rows_per_second=100, n_sides=2, cores=AB_CORES
+    ) == 1
+    assert recommended_state_partitions(2_000_000, 64, cores=AB_CORES) == 1
 
 
 def test_partitions_scale_with_state_volume():
     # 1e10 rows x 64 B = 640 GiB -> 2560 partitions, clamped to the cap
-    assert recommended_state_partitions(10**10, 64) == MAX_PARTITIONS
+    assert recommended_state_partitions(10**10, 64, cores=AB_CORES) == MAX_PARTITIONS
     # 8 GiB of state -> 32 partitions of 256 MiB each
-    assert recommended_state_partitions((8 << 30) // 64, 64) == 32
-    # zero state still gets the parallelism floor
-    assert recommended_state_partitions(0, 64) == MIN_PARTITIONS
+    assert recommended_state_partitions((8 << 30) // 64, 64, cores=AB_CORES) == 32
+
+
+def _ab_join(join_rows_per_s, n_sides, cores=AB_CORES):
+    """The join A/B workload at a given offered join rate (both sides
+    summed), passed per side, 60 s watermark + 60 s join window."""
+    per_side = join_rows_per_s / 2
+    est = estimate_join_state_rows(per_side, 60, 60, n_sides=2)
+    return recommended_state_partitions(
+        est, 64, rows_per_second=per_side, n_sides=n_sides, cores=cores
+    )
 
 
 def test_tuned_ab_workload_picks_the_measured_winner():
-    """The --tuned A/B workload (offered 133k rows/s, 120 s horizon):
-    the conservative offered-rate estimate is ~16M rows = 1 GiB, and
-    the rule must land on 8 partitions — the measured 221k rows/s cell
-    (16 partitions measured 140k; the commit-cost cliff sits between
-    8 and 16)."""
-    est = estimate_join_state_rows(133_333, 60, 60, n_sides=1)
-    assert recommended_state_partitions(est, 64) == 8
+    """The --tuned A/B join workload, round-13 4-core A/B (BASELINE.md,
+    medians of 4 samples): at 26.7k join rows/s offered 2 partitions
+    won (42k rows/s vs 26k on 1, 34k on 4, 28k on 8); at 107k offered
+    2, 4 and 8 tied at ~107k and 1 trailed (76-85k). 26.7k/25k -> 2;
+    107k -> 5, capped at the 4 cores (the volume term, 12.8M rows x
+    64 B = 4 partitions, agrees)."""
+    assert _ab_join(26_667, n_sides=2) == 2
+    assert _ab_join(106_667, n_sides=2) == 4
+    # the per-row term never exceeds the core count...
+    assert _ab_join(26_667, n_sides=2, cores=1) == 1
+    # ...but does not cap the volume term
+    assert _ab_join(106_667, n_sides=2, cores=2) == 4
+
+
+def test_aggregate_gets_volume_term_only():
+    """Aggregates partially aggregate before the state exchange, so the
+    same rates add no per-row term (the AVG at 1M rows/s held 1-2 state
+    rows and sustained 2.5M rows/s on 1 partition vs 1.0-2.1M on 8)."""
+    for rate in (26_667, 106_667):
+        est = estimate_join_state_rows(rate / 2, 60, 60, n_sides=2)
+        assert _ab_join(rate, n_sides=1) == recommended_state_partitions(
+            est, 64, cores=AB_CORES
+        )
+    assert _ab_join(26_667, n_sides=1) == 1
 
 
 def test_monotone_in_state_size():
     prev = 0
     for rows in (0, 10**5, 10**7, 10**8, 10**9, 10**10):
-        n = recommended_state_partitions(rows, 64)
+        n = recommended_state_partitions(rows, 64, cores=AB_CORES)
         assert n >= prev
         prev = n
+
+
+def test_monotone_in_join_rate():
+    for rows in (0, 10**6, 10**8):
+        prev = 0
+        for rate in (0, 100, 10_000, 30_000, 100_000, 10**6):
+            n = recommended_state_partitions(
+                rows, 64, rows_per_second=rate, n_sides=2, cores=AB_CORES
+            )
+            assert n >= prev
+            prev = n
 
 
 def test_configure_sets_shuffle_partitions(spark):
@@ -74,7 +121,10 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
     import pyspark.sql.functions as F
 
     from streams_prototyping_spark.data import load_table
-    from streams_prototyping_spark.streaming.pipelines import ads_with_clicks_stream
+    from streams_prototyping_spark.streaming.pipelines import (
+        ads_with_clicks_stream,
+        windowed_avg_stream,
+    )
     from streams_prototyping_spark.streaming.sources import create_stream
     from streams_prototyping_spark.streaming.state_sizing import start_stateful
 
@@ -98,13 +148,16 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
     s_clk = create_stream(spark, "clk", clk.schema, transport="file", path=cpath)
 
     # A 300k rows/s-per-side production estimate -> ~4.6 GiB of state ->
-    # NOT the floor and NOT the session default: proves the value flowed
+    # NOT 1 and NOT the session default: proves the value flowed
     # through the rule, not either constant.
     ckpt = str(tmp_path / "ckpt")
     expected = recommended_state_partitions(
-        estimate_join_state_rows(300_000, 60, 60, n_sides=2)
+        estimate_join_state_rows(300_000, 60, 60, n_sides=2),
+        rows_per_second=300_000,
+        n_sides=2,
+        cores=spark.sparkContext.defaultParallelism,
     )
-    assert expected != MIN_PARTITIONS and str(expected) != before
+    assert expected != 1 and str(expected) != before
     try:
         q = start_stateful(
             ads_with_clicks_stream(s_imp, s_clk, watermark="60 seconds"),
@@ -120,11 +173,34 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
         q.processAllAvailable()
         q.stop()
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(expected)
-        state0 = tmp_path / "ckpt" / "state" / "0"
-        part_dirs = [p for p in state0.iterdir() if p.name.isdigit()]
-        assert len(part_dirs) == expected
+        assert _pinned_state_partitions(tmp_path / "ckpt") == expected
+
+        # Tiny-state aggregate: the reference AVG's facts (500 rows/s,
+        # 10 s watermark) pin exactly ONE state store, not a floor.
+        ev = load_table(spark, sf_dir, "events").select("ts", "value").limit(50)
+        epath = str(tmp_path / "ev")
+        ev.write.parquet(epath)
+        s_ev = create_stream(spark, "ev", ev.schema, transport="file", path=epath)
+        q = start_stateful(
+            windowed_avg_stream(s_ev, watermark="10 seconds"),
+            rows_per_second=500,
+            watermark_seconds=10,
+            format="memory",
+            output_mode="update",
+            query_name="wavg_sized",
+            checkpoint_dir=str(tmp_path / "ckpt_avg"),
+        )
+        q.processAllAvailable()
+        q.stop()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        assert _pinned_state_partitions(tmp_path / "ckpt_avg") == 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def _pinned_state_partitions(ckpt) -> int:
+    """state/0/<partition-id> dirs the first stateful operator wrote."""
+    return sum(1 for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit())
 
 
 def test_mem_str_parsing():
