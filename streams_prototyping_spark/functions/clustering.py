@@ -528,12 +528,11 @@ SEMDEDUP_MIN_COS = 0.30  # within-cell cosine above this => semantic duplicate
 
 def _semdedup_oracle() -> str:
     from streams_prototyping_spark.functions.similarity import (
-        _DOT_DUCK,
         _SPLIT_HASH_DUCK,
+        cosine_duck,
     )
 
     _SPLIT_HASH_DUCK_SEM = _SPLIT_HASH_DUCK.format(id="vec_id")
-    dot = _DOT_DUCK.format(a="x.v", b="y.v")
     return f"""
 WITH {_lloyd_ctes()},
 van0 AS (
@@ -556,7 +555,7 @@ van0 AS (
     FROM van0
 ), pr AS (
     SELECT y.vec_id AS vec_id,
-           round({dot} / (sqrt(x.sqnorm) * sqrt(y.sqnorm)), 6) AS cos_sim
+           {cosine_duck("x.v", "x.sqnorm", "y.v", "y.sqnorm")} AS cos_sim
     FROM van x JOIN van y
       ON x.cell = y.cell AND x.sub = y.sub AND x.vec_id < y.vec_id
 ), d AS (
@@ -596,9 +595,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     session).
     """
     from streams_prototyping_spark.functions.similarity import (
-        _DOT_SPARK,
         _SPLIT_HASH_SPARK,
         _SQNORM_SPARK,
+        cosine,
     )
 
     a0 = _final_assign(spark, sf_dir).select(
@@ -638,11 +637,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("y.vec_id").alias("vec_id"),
-            F.round(
-                F.expr(_DOT_SPARK.format(a="x.v", b="y.v"))
-                / (F.sqrt("x.sqnorm") * F.sqrt("y.sqnorm")),
-                6,
-            ).alias("cos_sim"),
+            cosine("x.v", "x.sqnorm", "y.v", "y.sqnorm").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= SEMDEDUP_MIN_COS)
         .groupBy("vec_id")

@@ -40,9 +40,9 @@ from streams_prototyping_spark.functions.dedup import (
 from streams_prototyping_spark.functions.similarity import (
     _BUCKETS_CTE_DUCK,
     _COS_EXPR_DUCK,
-    _DOT_SPARK,
     _VECTORS_CTE_DUCK,
     _bucketed,
+    cosine,
 )
 from streams_prototyping_spark.registry import register
 from streams_prototyping_spark.stage_cache import shared_stage
@@ -317,11 +317,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
+        cosine("qv", "q_sqnorm", "v", "sqnorm").alias("cos_sim"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     topk = (

@@ -14,33 +14,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import streams_prototyping_spark.functions.clustering as _clu
-import streams_prototyping_spark.functions.similarity as _sim
-from streams_prototyping_spark.functions.similarity import ANN_TOP_K, cosine_topk
+from streams_prototyping_spark.functions.clustering import _ivfpq_oracle
+from streams_prototyping_spark.functions.similarity import (
+    _ANN_ORACLE,
+    _IVF_ORACLE,
+    _MULTIPROBE_ORACLE,
+    _NPROBE_ORACLE,
+    _TOPK_ORACLE,
+    ANN_TOP_K,
+    cosine_topk,
+)
 from streams_prototyping_spark.registry import register
 
 # method -> (oracle SQL producing (query_id, vec_id [, rnk]), query name)
 _RECALL_METHODS = {
-    "lsh": ("_ANN_ORACLE", "ann_lsh_topk"),
-    "lsh_multiprobe": ("_MULTIPROBE_ORACLE", "ann_lsh_topk_multiprobe"),
-    "ivf": ("_IVF_ORACLE", "ann_ivf_topk"),
-    "ivf_nprobe": ("_NPROBE_ORACLE", "ann_ivf_topk_nprobe"),
+    "lsh": (_ANN_ORACLE, "ann_lsh_topk"),
+    "lsh_multiprobe": (_MULTIPROBE_ORACLE, "ann_lsh_topk_multiprobe"),
+    "ivf": (_IVF_ORACLE, "ann_ivf_topk"),
+    "ivf_nprobe": (_NPROBE_ORACLE, "ann_ivf_topk_nprobe"),
+    "ivf_pq": (_ivfpq_oracle(), "ivf_pq_topk"),
 }
 
 
 def _recall_oracle() -> str:
-    parts = [
-        f"SELECT '{name}' AS method, query_id, vec_id FROM ({getattr(_sim, var)})"
-        for name, (var, _q) in _RECALL_METHODS.items()
-    ]
-    parts.append(
-        "SELECT 'ivf_pq' AS method, query_id, vec_id "
-        f"FROM ({_clu._ivfpq_oracle()})"
+    approx_union = "\nUNION ALL\n".join(
+        f"SELECT '{name}' AS method, query_id, vec_id FROM ({sql})"
+        for name, (sql, _q) in _RECALL_METHODS.items()
     )
-    approx_union = "\nUNION ALL\n".join(parts)
     return f"""
 WITH exact AS (
-    SELECT query_id, vec_id FROM ({_sim._TOPK_ORACLE}) WHERE rnk <= {ANN_TOP_K}
+    SELECT query_id, vec_id FROM ({_TOPK_ORACLE}) WHERE rnk <= {ANN_TOP_K}
 ), approx AS (
 {approx_union}
 )
@@ -72,9 +75,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streams_prototyping_spark.registry import QUERIES
 
     approx = None
-    for name, (_var, qname) in list(_RECALL_METHODS.items()) + [
-        ("ivf_pq", (None, "ivf_pq_topk"))
-    ]:
+    for name, (_sql, qname) in _RECALL_METHODS.items():
         part = QUERIES[qname](spark, sf_dir).select(
             F.lit(name).alias("method"), "query_id", "vec_id"
         )

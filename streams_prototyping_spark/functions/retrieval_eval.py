@@ -34,10 +34,10 @@ from streams_prototyping_spark.data import load_table
 from streams_prototyping_spark.functions.retrieval import N_QUERY_DOCS, word_tf_df
 from streams_prototyping_spark.functions.similarity import (
     _COS_EXPR_DUCK,
-    _DOT_SPARK,
     _VECTORS_CTE_DUCK,
     N_QUERIES,
     _vectors,
+    cosine,
 )
 from streams_prototyping_spark.registry import register
 
@@ -134,11 +134,7 @@ def ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qlabel",
             "vec_id",
             F.col("label").alias("clabel"),
-            F.round(
-                F.expr(_DOT_SPARK.format(a="qv", b="v"))
-                / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-                6,
-            ).alias("cos_sim"),
+            cosine("qv", "q_sqnorm", "v", "sqnorm").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
@@ -346,32 +342,23 @@ def _mmr_oracle() -> str:
     'not yet selected'; every score is rounded at 6 dp before the
     rank comparison, mirroring the Spark side exactly."""
     from streams_prototyping_spark.functions.similarity import (
-        _COS_EXPR_DUCK,
-        _DOT_DUCK,
+        _Q_DUCK,
         _VECTORS_CTE_DUCK,
-        N_QUERIES,
+        _probe_topk_oracle,
+        cosine_duck,
     )
 
+    exact = _probe_topk_oracle(_VECTORS_CTE_DUCK, _Q_DUCK, "vecs", None, MMR_CAND)
     head = f"""
 WITH {_VECTORS_CTE_DUCK},
-q AS (SELECT vec_id AS query_id, v, sqnorm FROM vecs WHERE vec_id < {N_QUERIES}),
-allp AS (
-    SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN vecs c ON c.vec_id <> q.query_id
-), cand AS (
-    SELECT query_id, vec_id, cos_sim AS rel FROM (
-        SELECT query_id, vec_id, cos_sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM allp
-    ) WHERE rn <= {MMR_CAND}
+cand AS (
+    SELECT query_id, vec_id, cos_sim AS rel FROM ({exact})
 ), cv AS (
     SELECT c.query_id, c.vec_id, c.rel, v.v, v.sqnorm
     FROM cand c JOIN vecs v USING (vec_id)
 ), sim AS (
     SELECT a.query_id, a.vec_id AS a_id, b.vec_id AS b_id,
-           round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                 / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) AS sim
+           {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} AS sim
     FROM cv a JOIN cv b
       ON a.query_id = b.query_id AND a.vec_id <> b.vec_id
 ), sel1 AS (
@@ -470,11 +457,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.query_id").alias("query_id"),
         F.col("a.vec_id").alias("a_id"),
         F.col("b.vec_id").alias("b_id"),
-        F.round(
-            F.expr(_DOT_SPARK.format(a="a.v", b="b.v"))
-            / (F.sqrt("a.sqnorm") * F.sqrt("b.sqnorm")),
-            6,
-        ).alias("sim"),
+        cosine("a.v", "a.sqnorm", "b.v", "b.sqnorm").alias("sim"),
     )
     sim = sim.coalesce(1).localCheckpoint(eager=True)
     sel = (

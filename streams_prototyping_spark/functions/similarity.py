@@ -1,30 +1,30 @@
 """Similarity search over the embeddings table (array<float>, dim 64).
 
-Three operators:
-- cosine_topk: brute-force exact top-k for a small query set — the
-  correctness baseline. Query vectors broadcast; candidates stream.
-- ann_lsh_topk: random-hyperplane LSH (sign-bit bucketing, Charikar
-  2002) — the scale path: candidates are restricted to the query's
-  bucket, so the join is keyed, not a cross product.
-- embedding_near_dup_pairs: near-duplicate pairs within LSH buckets.
+Every exact and approximate top-k query here is one skeleton,
+probe_topk: probe (a broadcast join of the query/probe list to an
+index, self excluded) -> score (cosine) -> rank (top-k per query by
+cos_sim desc, then vec_id). The index and the probe list are its
+parameters:
+- cosine_topk: no key, the whole corpus — the exact baseline;
+- ann_lsh_topk / ann_lsh_topk_multiprobe: random-hyperplane LSH
+  buckets (sign-bit bucketing, Charikar 2002), own bucket or own +
+  Hamming-distance-1 buckets;
+- ann_ivf_topk / ann_ivf_topk_nprobe: nearest-centroid cells, own
+  cell or the NPROBE nearest.
+_probe_topk_oracle is its DuckDB twin. embedding_near_dup_pairs
+thresholds the same cosine within LSH buckets.
 
 All dot products are computed in DOUBLE with the same left-to-right
 fold in both engines (Spark zip_with+aggregate vs DuckDB
-list_transform+list_sum) and rounded to 6 dp, so the oracle
-hash-compare is stable. The hyperplanes are the first 4 data vectors —
-deterministic and expressible in both engines (no RNG in SQL).
-
-Scale design (100 TB of embeddings): brute-force top-k is
-O(queries x corpus) — fine for a broadcast-able query set, which is the
-stated baseline. The LSH variant shuffles once on bucket id; recall
-is tuned by bits (here 4 -> 16 buckets) and would use multi-probe or
-band-OR at production scale. An IVF variant is the same plan shape
-with learned centroids instead of hyperplanes.
+list_transform+list_sum) and rounded to 6 dp (cosine / cosine_duck),
+so the oracle hash-compare is stable. The hyperplanes are the first
+data vectors — deterministic and expressible in both engines (no RNG
+in SQL).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from streams_prototyping_spark.data import (
@@ -103,24 +103,109 @@ vecs AS (
 )
 """
 
-_COS_EXPR_DUCK = (
-    "round(" + _DOT_DUCK.format(a="q.v", b="c.v") + " / (sqrt(q.sqnorm) * sqrt(c.sqnorm)), 6)"
-)
 
-_TOPK_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK},
-q AS (SELECT vec_id AS query_id, v, sqnorm FROM vecs WHERE vec_id < {N_QUERIES}),
+def cosine(a: str, a_sqnorm: str, b: str, b_sqnorm: str) -> Column:
+    """Cosine of two DOUBLE array columns from their squared norms,
+    rounded to 6 dp: the one score the similarity family ranks and
+    thresholds on. Operands render in the order given."""
+    return F.round(
+        F.expr(_DOT_SPARK.format(a=a, b=b)) / (F.sqrt(a_sqnorm) * F.sqrt(b_sqnorm)),
+        6,
+    )
+
+
+def cosine_duck(a: str, a_sqnorm: str, b: str, b_sqnorm: str) -> str:
+    """DuckDB twin of :func:`cosine` (same fold, same rounding)."""
+    return f"round({_DOT_DUCK.format(a=a, b=b)} / (sqrt({a_sqnorm}) * sqrt({b_sqnorm})), 6)"
+
+
+_COS_EXPR_DUCK = cosine_duck("q.v", "q.sqnorm", "c.v", "c.sqnorm")
+
+
+def _queries(rows: DataFrame, *probe: Column) -> DataFrame:
+    """The probe side of :func:`probe_topk` from index-shaped rows
+    (vec_id, v, sqnorm): (query_id, qv, q_sqnorm, *probe)."""
+    return rows.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("sqnorm").alias("q_sqnorm"),
+        *probe,
+    )
+
+
+def probe_topk(
+    index_df: DataFrame, probes_df: DataFrame, key: str | None, k: int
+) -> DataFrame:
+    """Probe -> score -> rank, the one skeleton of the exact and ANN
+    top-k family; the index and the probe list are its parameters.
+
+    - probe: ``probes_df`` (query_id, qv, q_sqnorm[, probe]) is
+      broadcast and joined to the ``index_df`` (vec_id, v, sqnorm[,
+      key]) rows whose ``key`` equals its ``probe`` — every index row
+      when ``key`` is None (the exact scan) — with self excluded
+      (vec_id <> query_id);
+    - score: :func:`cosine`;
+    - rank: (query_id, vec_id, cos_sim, rnk) for rnk <= ``k``, ordered
+      by cos_sim desc then vec_id (the cross-engine tie-break), so rnk
+      is gap-free from 1.
+
+    Scale note: the probe side is queries x probes rows, so the join
+    is a broadcast and candidates never shuffle; with a key only the
+    rows of the probed buckets/cells are scored. row_number's rnk <= k
+    filter plans as a WindowGroupLimit: each partition keeps its local
+    top-k before the exchange on query_id, so O(k) rows per (partition,
+    query) shuffle however many candidates are scored.
+
+    The DuckDB twin is :func:`_probe_topk_oracle`."""
+    match = F.col("vec_id") != F.col("query_id")
+    if key is not None:
+        match = (F.col(key) == F.col("probe")) & match
+    pairs = index_df.join(F.broadcast(probes_df), match).select(
+        "query_id", "vec_id", cosine("qv", "q_sqnorm", "v", "sqnorm").alias("cos_sim")
+    )
+    return _topk_per_query(pairs, k)
+
+
+def _topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
+    """probe_topk's rank tail: row_number over (query_id, cos_sim desc,
+    vec_id), cast to long, filtered to rnk <= k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id")
+    )
+    return pairs.select(
+        "query_id",
+        "vec_id",
+        "cos_sim",
+        F.row_number().over(w).cast("long").alias("rnk"),
+    ).filter(F.col("rnk") <= k)
+
+
+def _probe_topk_oracle(
+    ctes: str, q_sql: str, index_table: str, on: str | None, k: int
+) -> str:
+    """DuckDB twin of :func:`probe_topk`: after ``ctes``, ``q_sql``
+    defines ``q`` (query_id, v, sqnorm[, probe columns]); every
+    ``index_table`` row ``c`` matching ``on`` (all rows when None) is
+    scored, self excluded, and ranked to rnk <= ``k``."""
+    match = f"{on} AND " if on else ""
+    return f"""
+WITH {ctes},
+{q_sql},
 pairs AS (
     SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN vecs c ON c.vec_id <> q.query_id
+    FROM q JOIN {index_table} c ON {match}c.vec_id <> q.query_id
 )
 SELECT query_id, vec_id, cos_sim, rnk FROM (
     SELECT query_id, vec_id, cos_sim,
            CAST(row_number() OVER (PARTITION BY query_id
                                    ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
     FROM pairs
-) WHERE rnk <= {TOP_K}
+) WHERE rnk <= {k}
 """
+
+
+_Q_DUCK = f"q AS (SELECT vec_id AS query_id, v, sqnorm FROM vecs WHERE vec_id < {N_QUERIES})"
+_TOPK_ORACLE = _probe_topk_oracle(_VECTORS_CTE_DUCK, _Q_DUCK, "vecs", None, TOP_K)
 
 
 # Widest exact top-k any consumer needs: cosine_topk (TOP_K=5), the
@@ -142,23 +227,8 @@ def exact_topt_df(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 
     def build() -> DataFrame:
         vecs = _vectors(spark, sf_dir)
-        q = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("sqnorm").alias("q_sqnorm"),
-        )
-        pairs = vecs.join(
-            F.broadcast(q), F.col("vec_id") != F.col("query_id")
-        ).select(
-            "query_id",
-            "vec_id",
-            F.round(
-                F.expr(_DOT_SPARK.format(a="qv", b="v"))
-                / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-                6,
-            ).alias("cos_sim"),
-        )
-        return _topk_per_query(pairs, EXACT_TOP_T)
+        q = _queries(vecs.filter(F.col("vec_id") < N_QUERIES))
+        return probe_topk(vecs, q, None, EXACT_TOP_T)
 
     shared = shared_stage(spark, sf_dir, "similarity/exact_topk", build)
     return shared.filter(F.col("rnk") <= k)
@@ -167,34 +237,9 @@ def exact_topt_df(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 @register("cosine_topk", oracle=_TOPK_ORACLE)
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-{TOP_K} for each of the first
-    {N_QUERIES} vectors (self excluded).
-
-    Scale note: the query side is broadcast (it is the small side by
-    construction), candidates never shuffle, and row_number's
-    rank<=k filter becomes a per-partition WindowGroupLimit — so the
-    full corpus is read once, streamed, and only k rows per query
-    survive per partition (one shared scoring pass per session; see
-    exact_topt_df).
-    """
+    {N_QUERIES} vectors (self excluded): probe_topk with no key, from
+    one shared scoring pass per session (see exact_topt_df)."""
     return exact_topt_df(spark, sf_dir, TOP_K)
-
-
-def _topk_per_query(pairs, k: int):
-    """Per-query top-k rank filter shared by every similarity variant:
-    row_number over (query_id, cos_sim desc, vec_id) — the vec_id
-    tie-break keeps results deterministic across engines. Plans as a
-    WindowGroupLimit: each input partition pre-prunes to its local
-    top-k before the keyed exchange, so only O(k) rows per (partition,
-    query) shuffle regardless of candidate count."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return pairs.select(
-        "query_id",
-        "vec_id",
-        "cos_sim",
-        F.row_number().over(w).cast("long").alias("rnk"),
-    ).filter(F.col("rnk") <= k)
 
 
 # ------------------------------------------------------------------ LSH / ANN
@@ -273,55 +318,31 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_stage(spark, sf_dir, "similarity/lsh_buckets", build)
 
 
-_ANN_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK},
-{_BUCKETS_CTE_DUCK},
-q AS (SELECT vec_id AS query_id, v, sqnorm, bucket FROM bucketed WHERE vec_id < {N_QUERIES}),
-pairs AS (
-    SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN bucketed c ON c.bucket = q.bucket AND c.vec_id <> q.query_id
+_ANN_ORACLE = _probe_topk_oracle(
+    f"{_VECTORS_CTE_DUCK},\n{_BUCKETS_CTE_DUCK}",
+    f"q AS (SELECT vec_id AS query_id, v, sqnorm, bucket FROM bucketed WHERE vec_id < {N_QUERIES})",
+    "bucketed",
+    "c.bucket = q.bucket",
+    ANN_TOP_K,
 )
-SELECT query_id, vec_id, cos_sim, rnk FROM (
-    SELECT query_id, vec_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
-    FROM pairs
-) WHERE rnk <= {ANN_TOP_K}
-"""
 
 
 @register("ann_lsh_topk", oracle=_ANN_ORACLE)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-{ANN_TOP_K}: random-hyperplane LSH bucket join.
-    Candidates share the query's 4-bit sign bucket, so the search is a
-    keyed equi-join on bucket id instead of a cross product.
+    Candidates share the query's 4-bit sign bucket, so the search is
+    probe_topk keyed on bucket id instead of a cross product.
 
-    Scale note: this is the plan that survives 100x data — shuffle on
-    bucket id, ~1/16 of the corpus probed per query; recall/cost is
-    tuned by LSH_BITS and multi-probe. The hyperplanes here are the
-    first 4 data vectors for cross-engine determinism; production
+    Scale note: ~1/2^bits of the corpus is probed per query; recall/cost
+    is tuned by the index depth and multi-probe. The hyperplanes here
+    are the first data vectors for cross-engine determinism; production
     would use seeded Gaussian planes broadcast from the driver.
     """
     bucketed = _bucketed(spark, sf_dir)
-    q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-        F.col("bucket").alias("q_bucket"),
+    q = _queries(
+        bucketed.filter(F.col("vec_id") < N_QUERIES), F.col("bucket").alias("probe")
     )
-    pairs = bucketed.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _topk_per_query(pairs, ANN_TOP_K)
+    return probe_topk(bucketed, q, "bucket", ANN_TOP_K)
 
 
 _NEAR_DUP_ORACLE = f"""
@@ -336,7 +357,7 @@ subbed AS (
 ),
 pairs AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_DOT_DUCK.format(a="a.v", b="b.v")} / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) AS cos_sim
+           {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} AS cos_sim
     FROM subbed a JOIN subbed b
       ON a.bucket = b.bucket AND a.sub = b.sub AND a.vec_id < b.vec_id
 )
@@ -440,11 +461,7 @@ def _near_dup_pairs(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                F.expr(_DOT_SPARK.format(a="a.v", b="b.v"))
-                / (F.sqrt("a.sqnorm") * F.sqrt("b.sqnorm")),
-                6,
-            ).alias("cos_sim"),
+            cosine("a.v", "a.sqnorm", "b.v", "b.sqnorm").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= NEAR_DUP_MIN_COS)
     )
@@ -477,8 +494,7 @@ found AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
     FROM subbed a JOIN subbed b
       ON a.bucket = b.bucket AND a.sub = b.sub AND a.vec_id < b.vec_id
-    WHERE round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) >= {NEAR_DUP_MIN_COS}
+    WHERE {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} >= {NEAR_DUP_MIN_COS}
 ),
 smp AS (
     SELECT vec_id, v, sqnorm FROM vecs
@@ -488,8 +504,7 @@ smp AS (
 truth AS (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
     FROM smp a JOIN smp b ON a.vec_id < b.vec_id
-    WHERE round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) >= {NEAR_DUP_MIN_COS}
+    WHERE {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} >= {NEAR_DUP_MIN_COS}
 ),
 fs AS (
     SELECT f.vec_a, f.vec_b FROM found f
@@ -559,11 +574,7 @@ def near_dup_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .filter(
-            F.round(
-                F.expr(_DOT_SPARK.format(a="a.v", b="b.v"))
-                / (F.sqrt("a.sqnorm") * F.sqrt("b.sqnorm")),
-                6,
-            )
+            cosine("a.v", "a.sqnorm", "b.v", "b.sqnorm")
             >= NEAR_DUP_MIN_COS
         )
         .select(
@@ -630,7 +641,7 @@ _CELLS_CTE_DUCK = f"""
 cent AS (SELECT vec_id AS c_id, v AS cv, sqnorm AS c_sqnorm FROM vecs WHERE vec_id < {N_CENTROIDS}),
 scored AS (
     SELECT c.vec_id, c.v, c.sqnorm, cent.c_id,
-           round({_DOT_DUCK.format(a="c.v", b="cent.cv")} / (sqrt(c.sqnorm) * sqrt(cent.c_sqnorm)), 6) AS c_cos
+           {cosine_duck("c.v", "c.sqnorm", "cent.cv", "cent.c_sqnorm")} AS c_cos
     FROM vecs c CROSS JOIN cent
 ),
 ranked AS (
@@ -663,11 +674,7 @@ def _cells_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v",
             "sqnorm",
             "c_id",
-            F.round(
-                F.expr(_DOT_SPARK.format(a="v", b="cv"))
-                / (F.sqrt("sqnorm") * F.sqrt("c_sqnorm")),
-                6,
-            ).alias("c_cos"),
+            cosine("v", "sqnorm", "cv", "c_sqnorm").alias("c_cos"),
         )
         w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("c_id"))
         return scored.select(
@@ -682,21 +689,13 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cells_ranked(spark, sf_dir).filter(F.col("rn") == 1).drop("rn")
 
 
-_IVF_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK},
-{_CELLS_CTE_DUCK},
-q AS (SELECT vec_id AS query_id, v, sqnorm, cell FROM cells WHERE vec_id < {N_QUERIES}),
-pairs AS (
-    SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN cells c ON c.cell = q.cell AND c.vec_id <> q.query_id
+_IVF_ORACLE = _probe_topk_oracle(
+    f"{_VECTORS_CTE_DUCK},\n{_CELLS_CTE_DUCK}",
+    f"q AS (SELECT vec_id AS query_id, v, sqnorm, cell FROM cells WHERE vec_id < {N_QUERIES})",
+    "cells",
+    "c.cell = q.cell",
+    ANN_TOP_K,
 )
-SELECT query_id, vec_id, cos_sim, rnk FROM (
-    SELECT query_id, vec_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
-    FROM pairs
-) WHERE rnk <= {ANN_TOP_K}
-"""
 
 
 @register("ann_ivf_topk", oracle=_IVF_ORACLE)
@@ -704,44 +703,24 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat approximate top-k: vectors are inverted-file-indexed by
     nearest centroid (here {N_CENTROIDS} fixed pseudo-centroids for
     cross-engine determinism; production trains k-means centroids) and
-    a query probes only its own cell.
+    a query probes only its own cell — probe_topk keyed on cell.
 
-    Scale note: same keyed-join shape as the LSH variant but with
-    data-adaptive cells — at 100 TB the assignment pass is one
-    broadcast-join scan, the index is (cell -> vectors) partitioning,
-    and recall is tuned by nprobe (probing the top-P cells instead of
-    1, which here would just extend the rank filter over P cells).
+    Scale note: the assignment pass is one broadcast-join scan (the
+    shared ranked-cells stage); recall is tuned by nprobe
+    (ann_ivf_topk_nprobe).
     """
     cells = _cells(spark, sf_dir)
-    q = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-        F.col("cell").alias("q_cell"),
-    )
-    pairs = cells.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("q_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _topk_per_query(pairs, ANN_TOP_K)
+    q = _queries(cells.filter(F.col("vec_id") < N_QUERIES), F.col("cell").alias("probe"))
+    return probe_topk(cells, q, "cell", ANN_TOP_K)
 
 
 # ------------------------------------------------------------- multi-probe
 
 NPROBE = 2  # IVF: probe the 2 nearest cells per query
 
-_MULTIPROBE_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK},
-{_BUCKETS_CTE_DUCK},
-qb AS (SELECT vec_id AS query_id, v, sqnorm, bucket FROM bucketed WHERE vec_id < {N_QUERIES}),
+_MULTIPROBE_ORACLE = _probe_topk_oracle(
+    f"{_VECTORS_CTE_DUCK},\n{_BUCKETS_CTE_DUCK}",
+    f"""qb AS (SELECT vec_id AS query_id, v, sqnorm, bucket FROM bucketed WHERE vec_id < {N_QUERIES}),
 q AS (
     -- probe list sized to the ADAPTIVE index depth: own bucket + one
     -- per hyperplane at Hamming distance 1
@@ -751,18 +730,11 @@ q AS (
                                  i -> xor(bucket, CAST(pow(2, i) AS BIGINT)))))
                AS probe
     FROM qb
-),
-pairs AS (
-    SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN bucketed c ON c.bucket = q.probe AND c.vec_id <> q.query_id
+)""",
+    "bucketed",
+    "c.bucket = q.probe",
+    ANN_TOP_K,
 )
-SELECT query_id, vec_id, cos_sim, rnk FROM (
-    SELECT query_id, vec_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
-    FROM pairs
-) WHERE rnk <= {ANN_TOP_K}
-"""
 
 
 @register("ann_lsh_topk_multiprobe", oracle=_MULTIPROBE_ORACLE)
@@ -774,60 +746,32 @@ def ann_lsh_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly bits+1 (bits = the corpus-adaptive index depth, _lsh_bits);
     buckets are disjoint, so no candidate is scored twice.
 
-    Scale note: the plan is identical to ann_lsh_topk — a keyed
-    equi-join of the (still tiny, broadcast) exploded query-probe list
-    against the bucketed corpus — so the cost ceiling is
-    (1+bits)/2^bits of the corpus per query, and the bucket index is
-    the shared cached stage, computed once for the whole ANN family.
+    Scale note: ann_lsh_topk with an exploded probe list, so the cost
+    ceiling is (1+bits)/2^bits of the corpus per query.
     """
     nb = _lsh_bits(spark, sf_dir)
     bucketed = _bucketed(spark, sf_dir)
-    qb = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-        F.col("bucket").alias("q_bucket"),
+    qb = _queries(
+        bucketed.filter(F.col("vec_id") < N_QUERIES), F.col("bucket").alias("probe")
     )
     probes = F.array(
-        F.col("q_bucket"),
-        *[F.expr(f"q_bucket ^ {1 << i}").cast("long") for i in range(nb)],
+        F.col("probe"),
+        *[F.expr(f"probe ^ {1 << i}").cast("long") for i in range(nb)],
     )
-    q = qb.select(
-        "query_id", "qv", "q_sqnorm", F.explode(probes).alias("probe")
-    )
-    pairs = bucketed.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _topk_per_query(pairs, ANN_TOP_K)
+    q = qb.select("query_id", "qv", "q_sqnorm", F.explode(probes).alias("probe"))
+    return probe_topk(bucketed, q, "bucket", ANN_TOP_K)
 
 
-_NPROBE_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK},
-{_CELLS_CTE_DUCK},
-q AS (
+_NPROBE_ORACLE = _probe_topk_oracle(
+    f"{_VECTORS_CTE_DUCK},\n{_CELLS_CTE_DUCK}",
+    f"""q AS (
     SELECT vec_id AS query_id, v, sqnorm, cell
     FROM ranked WHERE vec_id < {N_QUERIES} AND rn <= {NPROBE}
-),
-pairs AS (
-    SELECT q.query_id, c.vec_id, {_COS_EXPR_DUCK} AS cos_sim
-    FROM q JOIN cells c ON c.cell = q.cell AND c.vec_id <> q.query_id
+)""",
+    "cells",
+    "c.cell = q.cell",
+    ANN_TOP_K,
 )
-SELECT query_id, vec_id, cos_sim, rnk FROM (
-    SELECT query_id, vec_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
-    FROM pairs
-) WHERE rnk <= {ANN_TOP_K}
-"""
 
 
 @register("ann_ivf_topk_nprobe", oracle=_NPROBE_ORACLE)
@@ -840,32 +784,14 @@ def ann_ivf_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: the probe list falls out of the SAME cached ranked
     assignment the base query uses (rn <= nprobe vs rn = 1) — no extra
-    scoring pass — and the join stays keyed on cell with the exploded
-    query side broadcast; cost scales linearly in nprobe.
+    scoring pass; cost scales linearly in nprobe.
     """
     ranked = _cells_ranked(spark, sf_dir)
-    cells = _cells(spark, sf_dir)
-    q = ranked.filter(
-        (F.col("vec_id") < N_QUERIES) & (F.col("rn") <= NPROBE)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-        F.col("cell").alias("q_cell"),
+    q = _queries(
+        ranked.filter((F.col("vec_id") < N_QUERIES) & (F.col("rn") <= NPROBE)),
+        F.col("cell").alias("probe"),
     )
-    pairs = cells.join(
-        F.broadcast(q),
-        (F.col("cell") == F.col("q_cell")) & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _topk_per_query(pairs, ANN_TOP_K)
+    return probe_topk(_cells(spark, sf_dir), q, "cell", ANN_TOP_K)
 
 
 # ----------------------------------------------------- recall evaluation
@@ -1011,11 +937,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor_label",
         "vec_id",
         F.col("label").alias("neg_label"),
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
+        cosine("qv", "q_sqnorm", "v", "sqnorm").alias("cos_sim"),
     )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id")
@@ -1048,8 +970,7 @@ x AS (
     WHERE vec_id < {2 * MARGIN_SIDE} AND vec_id % 2 = 1
 ), pairs AS (
     SELECT x.x_id, y.y_id,
-           round({_DOT_DUCK.format(a="x.v", b="y.v")}
-                 / (sqrt(x.sqnorm) * sqrt(y.sqnorm)), 6) AS cos_sim
+           {cosine_duck("x.v", "x.sqnorm", "y.v", "y.sqnorm")} AS cos_sim
     FROM x, y
 ), kx AS (
     SELECT x_id,
@@ -1133,11 +1054,7 @@ def margin_knn_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         return y.crossJoin(F.broadcast(x)).select(
             "x_id",
             "y_id",
-            F.round(
-                F.expr(_DOT_SPARK.format(a="xv", b="yv"))
-                / (F.sqrt("x_sqnorm") * F.sqrt("y_sqnorm")),
-                6,
-            ).alias("cos_sim"),
+            cosine("xv", "x_sqnorm", "yv", "y_sqnorm").alias("cos_sim"),
         )
 
     # shared_stage, not a bare persist(): the bench/oracle sweeps call

@@ -107,6 +107,8 @@ from streams_prototyping_spark.functions.similarity import (
     TARGET_BUCKET_OCC,
     _lsh_bits,
     _vectors,
+    cosine,
+    cosine_duck,
 )
 from streams_prototyping_spark.registry import register
 from streams_prototyping_spark.stage_cache import shared_stage
@@ -318,13 +320,11 @@ verified AS (
     -- cap at BANDS × {TARGET_BUCKET_OCC} per vector) but only
     -- threshold SURVIVORS ever reach a shuffle.
     SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                 / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) AS cos_sim
+           {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} AS cos_sim
     FROM subbed_v a JOIN subbed_v b
       ON a.band = b.band AND a.bucket = b.bucket AND a.ext = b.ext
          AND a.sub = b.sub AND a.vec_id < b.vec_id
-    WHERE round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) >= {NEAR_DUP_MIN_COS}
+    WHERE {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} >= {NEAR_DUP_MIN_COS}
 )
 """
 
@@ -625,11 +625,7 @@ def _banded_pairs(
             .select(
                 "vec_a",
                 "vec_b",
-                F.round(
-                    F.expr(_DOT_SPARK.format(a="av", b="bv"))
-                    / (F.sqrt("asq") * F.sqrt("bsq")),
-                    6,
-                ).alias("cos_sim"),
+                cosine("av", "asq", "bv", "bsq").alias("cos_sim"),
             )
             .filter(F.col("cos_sim") >= NEAR_DUP_MIN_COS)
         )
@@ -725,8 +721,7 @@ smp AS (
 ),
 truth AS MATERIALIZED (
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round({_DOT_DUCK.format(a="a.v", b="b.v")}
-                 / (sqrt(a.sqnorm) * sqrt(b.sqnorm)), 6) AS cos
+           {cosine_duck("a.v", "a.sqnorm", "b.v", "b.sqnorm")} AS cos
     FROM smp a JOIN smp b ON a.vec_id < b.vec_id
 ),
 fs AS MATERIALIZED (
@@ -808,11 +803,7 @@ def _recall_rows(
         return a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                F.expr(_DOT_SPARK.format(a="a.v", b="b.v"))
-                / (F.sqrt("a.sqnorm") * F.sqrt("b.sqnorm")),
-                6,
-            ).alias("tcos"),
+            cosine("a.v", "a.sqnorm", "b.v", "b.sqnorm").alias("tcos"),
         )
 
     # two consumers (the per-threshold truth counts and the found⋈truth

@@ -51,11 +51,12 @@ from streams_prototyping_spark.stage_cache import shared_stage
 from streams_prototyping_spark.functions.similarity import (
     N_QUERIES,
     TOP_K,
-    _DOT_DUCK,
-    _DOT_SPARK,
-    _topk_per_query,
-    _vectors,
+    _Q_DUCK,
     _VECTORS_CTE_DUCK,
+    _probe_topk_oracle,
+    _queries,
+    _vectors,
+    probe_topk,
 )
 
 SQ_LEVELS = 255  # 8-bit: codes in 0..255
@@ -172,28 +173,18 @@ def sq8_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQ8_ADC_ORACLE = f"""
-WITH {_VECTORS_CTE_DUCK}, {_SQ8_ENC_CTE},
+_SQ8_ADC_ORACLE = _probe_topk_oracle(
+    f"""{_VECTORS_CTE_DUCK}, {_SQ8_ENC_CTE},
 cand AS (
-    SELECT vec_id, recon,
-           list_sum(list_transform(recon, x -> x * x)) AS r_sqnorm
+    SELECT vec_id, recon AS v,
+           list_sum(list_transform(recon, x -> x * x)) AS sqnorm
     FROM deq
-), q AS (
-    SELECT vec_id AS query_id, v AS qv, sqnorm AS q_sqnorm
-    FROM vecs WHERE vec_id < {N_QUERIES}
-), pairs AS (
-    SELECT q.query_id, c.vec_id,
-           round({_DOT_DUCK.format(a="q.qv", b="c.recon")}
-                 / (sqrt(q.q_sqnorm) * sqrt(c.r_sqnorm)), 6) AS cos_sim
-    FROM q JOIN cand c ON c.vec_id <> q.query_id
+)""",
+    _Q_DUCK,
+    "cand",
+    None,
+    TOP_K,
 )
-SELECT query_id, vec_id, cos_sim, rnk FROM (
-    SELECT query_id, vec_id, cos_sim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rnk
-    FROM pairs
-) WHERE rnk <= {TOP_K}
-"""
 
 
 @register("sq8_adc_topk", oracle=_SQ8_ADC_ORACLE)
@@ -205,31 +196,17 @@ def sq8_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine_topk baseline is the number a store owner watches when
     flipping a collection to int8.
 
-    Scale note: queries broadcast; candidates scored map-side off the
-    shared encoded stage; WindowGroupLimit bounds the exchange at O(k)
-    rows per partition.
+    probe_topk with no key over the shared encoded stage (its docstring
+    has the plan).
     """
     enc = _sq8_encoded(spark, sf_dir)
     cand = enc.select(
         "vec_id",
-        "recon",
+        F.col("recon").alias("v"),
         F.expr(
             "aggregate(transform(recon, x -> x * x), CAST(0.0 AS DOUBLE),"
             " (acc, e) -> acc + e)"
-        ).alias("r_sqnorm"),
+        ).alias("sqnorm"),
     )
-    q = _vectors(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    pairs = cand.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="recon"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("r_sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _topk_per_query(pairs, TOP_K)
+    q = _queries(_vectors(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES))
+    return probe_topk(cand, q, None, TOP_K)

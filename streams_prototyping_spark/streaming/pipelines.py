@@ -382,72 +382,6 @@ def ewma_stateful_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_tws_stream(events: DataFrame) -> DataFrame:
-    """ewma_stateful_stream on Spark 4's transformWithStateInPandas —
-    the modern arbitrary-stateful API (StatefulProcessor + typed
-    ValueState, RocksDB-only) that supersedes applyInPandasWithState.
-    Same contract as the legacy twin: one (ewma, n) state row per
-    user, identical fold arithmetic, one update row per key per
-    micro-batch; tests pin exact equality of the two APIs' final
-    tables and the batch fold.
-
-    Why carry both: applyInPandasWithState runs on any provider and
-    matches the reference era's semantics; transformWithState is where
-    Spark's stateful roadmap lives (typed composite state, state TTL,
-    event-time timers) and REQUIRES the RocksDB provider — the 100 TB
-    deployment default anyway (SURVEY §4.2). New stateful operators
-    should start here; the legacy twins stay as the
-    provider-portability fallback.
-
-    Environment note: the tws Python runner speaks protobuf; in a
-    sandbox without google.protobuf the query fails at start()
-    (PROBE_CONNECTORS.md §5) — construction and plan analysis still
-    work, and the convergence test skip-gates on the module.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ewma", _EWMA_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                ewma, n = self._state.get()
-            else:
-                ewma, n = None, 0
-            pdf = pd.concat(list(rows))
-            if len(pdf):
-                # same fold as _ewma_update: event-time order, seeded
-                # by the first observation
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for v in pdf["value"].astype(float):
-                    ewma = (
-                        v if n == 0 else (1.0 - EWMA_ALPHA) * ewma + EWMA_ALPHA * v
-                    )
-                    n += 1
-                self._state.update((float(ewma), int(n)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "ewma": [round(ewma, 6) if ewma is not None else None],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=_EWMA_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def dedup_ttl_stream(docs: DataFrame, ttl_ms: "int | None" = None) -> DataFrame:
     """Ingest dedup with a STATE-TTL retention horizon — a capability
     only the transformWithState API offers (per-state TTL; the legacy
@@ -467,8 +401,9 @@ def dedup_ttl_stream(docs: DataFrame, ttl_ms: "int | None" = None) -> DataFrame:
     which is precisely how retention-horizon dedup is specified (and
     RocksDB evicts the expired rows instead of the JVM heap holding
     them). State is ONE long per distinct in-horizon fingerprint.
-    Environment note: needs google.protobuf at runtime — see
-    ewma_tws_stream / PROBE_CONNECTORS.md §5.
+    Environment note: the transformWithState Python runner speaks
+    protobuf, so without google.protobuf the query fails at start()
+    (PROBE_CONNECTORS.md §5); construction and plan analysis still work.
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

@@ -96,6 +96,7 @@ PROVIDER_FLIP_HEAP_FRACTION = 0.5
 # HDFS-side estimate by this measured factor; RocksDB sizing keeps
 # using the serialized width (its resident cost measured BELOW width).
 HDFS_RESIDENT_BYTES_PER_WIDTH_BYTE = 5.0
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -274,17 +275,10 @@ def start_stateful(
     micro-batch 0 fails analysis (found by the round-8 crossover soak,
     scripts/start_stateful_join_soak.py).
 
-    NOTE the helper intentionally does NOT restore the previous
-    ``spark.sql.shuffle.partitions``: micro-batch 0 plans
-    asynchronously after ``start()`` returns and reads the session
-    conf at that point — restoring immediately would race the very
-    setting this function exists to apply. The count it leaves behind
-    can be as low as 1 (tiny state, slow or aggregate-only input), so
-    any batch work run in the same session afterwards plans its
-    shuffles with ONE partition: a serial, possibly spilling stage.
-    Run batch work after a stream start from ``spark.newSession()``
-    (shared SparkContext, independent SQLConf), and have tests restore
-    the previous value in a ``finally``.
+    The caller's session keeps its own ``spark.sql.shuffle.partitions``
+    and provider: ``start()`` copies the session conf into the stream,
+    whose first offset-log entry records both, so they are restored as
+    soon as it returns.
     """
     if est_state_rows is None:
         if rows_per_second is None:
@@ -295,6 +289,10 @@ def start_stateful(
             rows_per_second, watermark_seconds, join_window_seconds, n_sides
         )
     spark = df.sparkSession
+    prior = {
+        k: spark.conf.get(k, None)
+        for k in ("spark.sql.shuffle.partitions", _PROVIDER_KEY)
+    }
     configure_stateful_shuffle(
         spark, est_state_rows, row_width_bytes, rows_per_second or 0.0, n_sides
     )
@@ -310,7 +308,7 @@ def start_stateful(
         )
     if provider is not None:
         spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
+            _PROVIDER_KEY,
             _ROCKSDB_PROVIDER if provider == "rocksdb" else _HDFS_PROVIDER,
         )
     writer = df.writeStream.format(format).outputMode(output_mode)
@@ -322,4 +320,11 @@ def start_stateful(
         writer = writer.trigger(processingTime=processing_time)
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
-    return writer.start()
+    try:
+        return writer.start()
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -36,31 +36,18 @@ def _rows(df, *order):
 
 def test_exact_topt_filter_equals_direct_window(spark):
     from streams_prototyping_spark.functions.similarity import (
-        _DOT_SPARK,
         EXACT_TOP_T,
         N_QUERIES,
-        _topk_per_query,
+        _queries,
         _vectors,
         exact_topt_df,
+        probe_topk,
     )
 
     vecs = _vectors(spark, SF_DIR)
-    q = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("sqnorm").alias("q_sqnorm"),
-    )
-    pairs = vecs.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "vec_id",
-        F.round(
-            F.expr(_DOT_SPARK.format(a="qv", b="v"))
-            / (F.sqrt("q_sqnorm") * F.sqrt("sqnorm")),
-            6,
-        ).alias("cos_sim"),
-    )
+    q = _queries(vecs.filter(F.col("vec_id") < N_QUERIES))
     for k in (3, 5, EXACT_TOP_T):
-        direct = _rows(_topk_per_query(pairs, k), "query_id", "rnk")
+        direct = _rows(probe_topk(vecs, q, None, k), "query_id", "rnk")
         shared = _rows(exact_topt_df(spark, SF_DIR, k), "query_id", "rnk")
         assert direct == shared, f"k={k}: shared top-T filter != direct window"
 

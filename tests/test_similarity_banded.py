@@ -11,7 +11,9 @@ What needs pinning beyond the hash-match:
 - the recall claim the variant exists for: banded recall must beat the
   single-table detector's on the same data;
 - the audit's structural invariants (n_extra = 0, n_hit ≤ n_true,
-  recall ∈ [0, 1]).
+  recall ∈ [0, 1]);
+- the probe → score → rank contract of similarity.probe_topk (and its
+  DuckDB template) that every exact/ANN top-k query shares.
 """
 
 import duckdb
@@ -246,3 +248,58 @@ def test_sq8_quantization_bound_holds(spark):
     rng = qv.agg(F.min("qs"), F.max("qs")).first()
     assert rng[0] >= 1.0 / (127 * 8) - 1e-12
     assert rng[1] <= 1.0 / 127 + 1e-12
+
+
+# vec 0 is the query (bucket 1); 2 and 4 are the same vector, an exact
+# cosine tie; 5 is the query's own direction but in another bucket.
+_SKELETON_ROWS = [
+    (0, [1.0, 0.0], 1),
+    (1, [0.0, 1.0], 1),
+    (2, [2.0, 2.0], 1),
+    (3, [3.0, 1.0], 1),
+    (4, [2.0, 2.0], 1),
+    (5, [1.0, 0.0], 2),
+]
+
+
+def test_probe_topk_contract(spark):
+    """Self excluded, only key-matching rows scored, ties broken toward
+    the smaller vec_id, rnk gap-free up to k — in Spark and in the
+    DuckDB oracle template. Random test data never pins the tie-break."""
+    from streams_prototyping_spark.functions.similarity import (
+        _probe_topk_oracle,
+        _queries,
+        probe_topk,
+    )
+
+    rows = [(i, v, sum(x * x for x in v), b) for i, v, b in _SKELETON_ROWS]
+    index = spark.createDataFrame(
+        rows, "vec_id long, v array<double>, sqnorm double, bucket long"
+    )
+    q = _queries(index.filter(F.col("vec_id") == 0), F.col("bucket").alias("probe"))
+
+    def ranked(key, k):
+        return [
+            (r.vec_id, r.cos_sim, r.rnk)
+            for r in probe_topk(index, q, key, k).orderBy("rnk").collect()
+        ]
+
+    keyed = [(3, 0.948683, 1), (2, 0.707107, 2), (4, 0.707107, 3)]
+    assert ranked("bucket", 3) == keyed
+    assert ranked("bucket", 2) == keyed[:2]
+    assert ranked("bucket", 10) == keyed + [(1, 0.0, 4)]
+    # the exact scan (no key) also scores the other bucket's vector
+    assert ranked(None, 3) == [(5, 1.0, 1), (3, 0.948683, 2), (2, 0.707107, 3)]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE idx (vec_id BIGINT, v DOUBLE[], sqnorm DOUBLE, bucket BIGINT)")
+    con.executemany("INSERT INTO idx VALUES (?, ?, ?, ?)", rows)
+    sql = _probe_topk_oracle(
+        "vecs AS (SELECT * FROM idx)",
+        "q AS (SELECT vec_id AS query_id, v, sqnorm, bucket FROM vecs WHERE vec_id = 0)",
+        "vecs",
+        "c.bucket = q.bucket",
+        3,
+    )
+    got = con.execute(f"SELECT vec_id, cos_sim, rnk FROM ({sql}) ORDER BY rnk").fetchall()
+    assert got == keyed

@@ -116,8 +116,9 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
     on the A/B-winning partition count. Start ads_with_clicks_stream
     through start_stateful() on a FRESH checkpoint and verify the count
     that got PINNED INTO THE CHECKPOINT (state/0/<partition-id> dirs —
-    the on-disk fact Spark replays forever after) equals the sizing
-    rule's recommendation, not the session default."""
+    the on-disk fact Spark replays forever after, and the conf recorded
+    in offsets/0) equals the sizing rule's recommendation, while the
+    caller's session keeps the value it had before the call."""
     import pyspark.sql.functions as F
 
     from streams_prototyping_spark.data import load_table
@@ -150,7 +151,6 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
     # A 300k rows/s-per-side production estimate -> ~4.6 GiB of state ->
     # NOT 1 and NOT the session default: proves the value flowed
     # through the rule, not either constant.
-    ckpt = str(tmp_path / "ckpt")
     expected = recommended_state_partitions(
         estimate_join_state_rows(300_000, 60, 60, n_sides=2),
         rows_per_second=300_000,
@@ -158,49 +158,59 @@ def test_start_stateful_pins_sized_partitions_at_checkpoint(spark, sf_dir, tmp_p
         cores=spark.sparkContext.defaultParallelism,
     )
     assert expected != 1 and str(expected) != before
-    try:
-        q = start_stateful(
-            ads_with_clicks_stream(s_imp, s_clk, watermark="60 seconds"),
-            rows_per_second=300_000,
-            watermark_seconds=60,
-            join_window_seconds=60,
-            n_sides=2,
-            format="memory",
-            output_mode="append",
-            query_name="ssj_sized",
-            checkpoint_dir=ckpt,
-        )
-        q.processAllAvailable()
-        q.stop()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(expected)
-        assert _pinned_state_partitions(tmp_path / "ckpt") == expected
+    q = start_stateful(
+        ads_with_clicks_stream(s_imp, s_clk, watermark="60 seconds"),
+        rows_per_second=300_000,
+        watermark_seconds=60,
+        join_window_seconds=60,
+        n_sides=2,
+        format="memory",
+        output_mode="append",
+        query_name="ssj_sized",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    q.processAllAvailable()
+    q.stop()
+    assert _pinned_state_partitions(tmp_path / "ckpt") == expected
+    assert _offset_conf(tmp_path / "ckpt")["spark.sql.shuffle.partitions"] == str(
+        expected
+    )
 
-        # Tiny-state aggregate: the reference AVG's facts (500 rows/s,
-        # 10 s watermark) pin exactly ONE state store, not a floor.
-        ev = load_table(spark, sf_dir, "events").select("ts", "value").limit(50)
-        epath = str(tmp_path / "ev")
-        ev.write.parquet(epath)
-        s_ev = create_stream(spark, "ev", ev.schema, transport="file", path=epath)
-        q = start_stateful(
-            windowed_avg_stream(s_ev, watermark="10 seconds"),
-            rows_per_second=500,
-            watermark_seconds=10,
-            format="memory",
-            output_mode="update",
-            query_name="wavg_sized",
-            checkpoint_dir=str(tmp_path / "ckpt_avg"),
-        )
-        q.processAllAvailable()
-        q.stop()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert _pinned_state_partitions(tmp_path / "ckpt_avg") == 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    # Tiny-state aggregate: the reference AVG's facts (500 rows/s,
+    # 10 s watermark) pin exactly ONE state store, not a floor.
+    ev = load_table(spark, sf_dir, "events").select("ts", "value").limit(50)
+    epath = str(tmp_path / "ev")
+    ev.write.parquet(epath)
+    s_ev = create_stream(spark, "ev", ev.schema, transport="file", path=epath)
+    q = start_stateful(
+        windowed_avg_stream(s_ev, watermark="10 seconds"),
+        rows_per_second=500,
+        watermark_seconds=10,
+        format="memory",
+        output_mode="update",
+        query_name="wavg_sized",
+        checkpoint_dir=str(tmp_path / "ckpt_avg"),
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    q.processAllAvailable()
+    q.stop()
+    assert _pinned_state_partitions(tmp_path / "ckpt_avg") == 1
+    assert _offset_conf(tmp_path / "ckpt_avg")["spark.sql.shuffle.partitions"] == "1"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def _pinned_state_partitions(ckpt) -> int:
     """state/0/<partition-id> dirs the first stateful operator wrote."""
     return sum(1 for p in (ckpt / "state" / "0").iterdir() if p.name.isdigit())
+
+
+def _offset_conf(ckpt) -> dict:
+    """The session conf the query recorded in its first offset-log entry."""
+    import json
+
+    lines = (ckpt / "offsets" / "0").read_text().splitlines()
+    return json.loads(lines[1])["conf"]
 
 
 def test_mem_str_parsing():
@@ -288,28 +298,24 @@ def test_start_stateful_auto_flips_provider(spark, sf_dir, tmp_path):
     )
 
     key = "spark.sql.streaming.stateStore.providerClass"
-    before_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    before = spark.conf.get(key, None)
     events = load_table(spark, sf_dir, "events").select("ts", "value").limit(50)
     path = str(tmp_path / "ev")
     events.write.parquet(path)
     heap = executor_heap_bytes(spark)
     big = (heap // 2) // 64 + 1  # rows such that est state > half heap
-    try:
-        for est, want in ((big, "RocksDB"), (1000, "HDFS")):
-            stream = create_stream(
-                spark, "ev", events.schema, transport="file", path=path
-            )
-            q = start_stateful(
-                windowed_avg_stream(stream),
-                est_state_rows=est,
-                format="memory",
-                output_mode="complete",
-                query_name=f"wavg_{want}",
-                checkpoint_dir=str(tmp_path / f"ckpt_{want}"),
-            )
-            q.processAllAvailable()
-            q.stop()
-            assert want in spark.conf.get(key)
-    finally:
-        spark.conf.unset(key)
-        spark.conf.set("spark.sql.shuffle.partitions", before_parts)
+    for est, want in ((big, "RocksDB"), (1000, "HDFS")):
+        stream = create_stream(spark, "ev", events.schema, transport="file", path=path)
+        ckpt = tmp_path / f"ckpt_{want}"
+        q = start_stateful(
+            windowed_avg_stream(stream),
+            est_state_rows=est,
+            format="memory",
+            output_mode="complete",
+            query_name=f"wavg_{want}",
+            checkpoint_dir=str(ckpt),
+        )
+        q.processAllAvailable()
+        q.stop()
+        assert want in _offset_conf(ckpt)[key]
+        assert spark.conf.get(key, None) == before

@@ -349,91 +349,15 @@ def test_tws_pipelines_construct_and_fail_actionably_without_protobuf(
     runner boots), so users get a normal analyzed DataFrame and the
     missing-dependency error only at start() — pinned here so the seam
     stays honest."""
-    from streams_prototyping_spark.streaming.pipelines import (
-        dedup_ttl_stream,
-        ewma_tws_stream,
-    )
+    from streams_prototyping_spark.streaming.pipelines import dedup_ttl_stream
 
     src = tmp_path / "tws_probe"
     src.mkdir()
-    ev = spark.readStream.schema(
-        "user_id long, ts timestamp, event_id long, value double"
-    ).parquet(str(src))
-    df = ewma_tws_stream(ev)
-    assert df.isStreaming and set(df.columns) == {"user_id", "n_events", "ewma"}
     d = dedup_ttl_stream(
         spark.readStream.schema("fingerprint string").parquet(str(src)),
         ttl_ms=1000,
     )
     assert d.isStreaming and set(d.columns) == {"fingerprint", "is_new", "n_copies"}
-
-
-def test_ewma_transform_with_state_matches_legacy_and_batch(spark, sf_dir, tmp_path):
-    """The transformWithStateInPandas twin (Spark 4 StatefulProcessor,
-    RocksDB-backed typed ValueState) must land on the SAME final table
-    as the batch fold — proving the modern stateful API carries the
-    exact legacy applyInPandasWithState semantics before new operators
-    build on it."""
-    import time as _time
-
-    import pytest
-
-    if not _has_protobuf():
-        pytest.skip("no google.protobuf in sandbox (tws state protocol)")
-
-    from streams_prototyping_spark import registry
-    from streams_prototyping_spark.data import load_table
-    from streams_prototyping_spark.streaming.pipelines import ewma_tws_stream
-
-    registry.load_all()
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
-    rows = ev.orderBy("ts", "event_id").collect()
-    path = str(tmp_path / "ewma_tws")
-    third = (len(rows) + 2) // 3
-    for i in range(3):
-        spark.createDataFrame(rows[i * third : (i + 1) * third], ev.schema).coalesce(
-            1
-        ).write.mode("append").parquet(path)
-        _time.sleep(1.1)
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        q = (
-            ewma_tws_stream(stream)
-            .writeStream.format("memory")
-            .queryName("ewma_tws")
-            .outputMode("update")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-    got: dict[int, tuple] = {}
-    for r in spark.table("ewma_tws").collect():
-        p = got.get(r["user_id"])
-        if p is None or r["n_events"] > p[0]:
-            got[r["user_id"]] = (r["n_events"], r["ewma"])
-    want = {
-        r["user_id"]: (r["n_events"], r["ewma"])
-        for r in registry.QUERIES["ewma_per_user"](spark, sf_dir).collect()
-    }
-    assert got == want
 
 
 def test_dedup_ttl_stream_cross_batch_and_expiry(spark, tmp_path):
